@@ -46,6 +46,47 @@ def trips_vs_prev(prev_sec: float, now_sec: float) -> bool:
     )
 
 
+def materialize(df) -> None:
+    """Materialize ``df`` to the driver through the first transfer path
+    it offers: toArrow, else toPandas, else collect. Only a MISSING
+    method falls through — an arm that raises inside toArrow raises,
+    instead of re-executing through the slower paths."""
+    for method in ("toArrow", "toPandas", "collect"):
+        fn = getattr(df, method, None)
+        if fn is not None:
+            fn()
+            return
+    raise TypeError(f"cannot materialize {type(df).__name__}")
+
+
+def _error_text(exc: BaseException) -> str:
+    return f"{type(exc).__name__}: {exc}"[:400]
+
+
+def run_arms(names, run, release) -> tuple[dict[str, float], dict[str, str]]:
+    """Time each arm once: ``run(name)`` builds and materializes it,
+    ``release()`` runs after every arm. An arm that raises is recorded
+    ONCE in the returned errors (and gets no timing); the run goes on
+    to the next arm."""
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        t0 = time.perf_counter()
+        try:
+            run(name)
+        except Exception as exc:
+            errors[name] = _error_text(exc)
+            print(json.dumps({"query": name, "error": errors[name]}), flush=True)
+        else:
+            timings[name] = round(time.perf_counter() - t0, 3)
+            # stream the line NOW (consumers keep the LAST occurrence
+            # per query, so the canonical end-of-run reprint wins): a
+            # crash mid-suite then still shows how far the run got
+            print(json.dumps({"query": name, "sec": timings[name]}), flush=True)
+        release()
+    return timings, errors
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -63,41 +104,13 @@ def main() -> None:
     only = os.environ.get("BENCH_ONLY")
     names = sorted(QUERIES) if not only else [n for n in sorted(QUERIES) if n in set(only.split(","))]
 
-    def materialize(df) -> None:
-        try:
-            df.toArrow()
-        except Exception:
-            try:
-                df.toPandas()
-            except Exception:
-                df.collect()
-
     # warm the JVM + parquet footers once so timings measure the query,
-    # not session startup
-    materialize(QUERIES[names[0]](spark, sf_dir))
-
-    # BENCH_GC_MODE (bisect knob): full (default) = clearCache + RDD
-    # sweep + System.gc per query; sweep = no System.gc; cache =
-    # clearCache only (round-1 behavior, leaks RDD-level checkpoint
-    # blocks); none = no per-query cleanup (measured catastrophic:
-    # 178s vs 50s on a 12-query subset). Round-3 measurement flipped
-    # sweep->full: without the GC, session state that only the
-    # ContextCleaner's driver-GC hook reclaims (broadcast blocks,
-    # weak-ref'd shuffle state) accumulates across queries and
-    # queries run ~4x slower by mid-suite (9-query reproducer:
-    # 65.6s sweep vs 20.0s full; full 109-query suite 335s vs 167s).
-    gc_mode = os.environ.get("BENCH_GC_MODE", "full")
-    if gc_mode not in ("none", "cache", "sweep", "full"):
-        raise SystemExit(
-            f"BENCH_GC_MODE={gc_mode!r} — expected none|cache|sweep|full "
-            "(a typo here would silently measure the wrong cleanup protocol)"
-        )
-
-    # BENCH_GC_EVERY=N runs the System.gc on every Nth query only
-    # (cache/RDD sweep still per-query) — knob for measuring the GC's
-    # own cost vs the accumulation it prevents. Default 1.
-    gc_every = max(int(os.environ.get("BENCH_GC_EVERY", "1")), 1)
-    gc_counter = {"n": 0}
+    # not session startup (an arm that raises here is recorded by the
+    # timed loop below)
+    try:
+        materialize(QUERIES[names[0]](spark, sf_dir))
+    except Exception:
+        pass
 
     def release_storage() -> None:
         # Isolate queries: clearCache drops SQL-cached plans, but
@@ -106,33 +119,20 @@ def main() -> None:
         # they accumulate until storage squeezes execution memory and
         # every later query pays in spills/GC. Sweep ALL persistent
         # RDDs via the SparkContext and nudge the JVM GC so the
-        # ContextCleaner also drops orphaned shuffle/broadcast state.
-        if gc_mode == "none":
-            return
-        if gc_mode == "cache":
-            spark.catalog.clearCache()
-            return
+        # ContextCleaner also drops orphaned shuffle/broadcast state
+        # (round-3 measurement: without the GC, broadcast blocks and
+        # weak-ref'd shuffle state accumulate and queries run ~4x
+        # slower by mid-suite — full 109-query suite 335s vs 167s).
         # canonical clearCache + persistent-RDD sweep lives in the
         # library (single source of truth for what "released" means)
         from mfdb_hafro_etl_spark.session import release_cached_intermediates
 
         release_cached_intermediates(spark)
-        if gc_mode == "sweep":
-            return
-        gc_counter["n"] += 1
-        if gc_counter["n"] % gc_every == 0:
-            spark.sparkContext._jvm.System.gc()
+        spark.sparkContext._jvm.System.gc()
 
-    timings: dict[str, float] = {}
-    for name in names:
-        t0 = time.perf_counter()
-        materialize(QUERIES[name](spark, sf_dir))
-        timings[name] = round(time.perf_counter() - t0, 3)
-        # stream the line NOW (consumers keep the LAST occurrence per
-        # query, so the canonical end-of-run reprint wins): a crash
-        # mid-suite then still shows exactly how far the run got
-        print(json.dumps({"query": name, "sec": timings[name]}), flush=True)
-        release_storage()
+    timings, errors = run_arms(
+        names, lambda name: materialize(QUERIES[name](spark, sf_dir)), release_storage
+    )
 
     # Re-time the slow tail and keep the per-query minimum: single
     # measurements in a 100+-query session carry 1-5 s of jitter
@@ -158,7 +158,7 @@ def main() -> None:
                 retime_small > 0 and sec < retime_small
             )
 
-        for name in [n for n in names if _wants_retime(timings[n])]:
+        for name in [n for n in timings if _wants_retime(timings[n])]:
             # up to two re-runs, stopping when CONSECUTIVE timings
             # agree within 10%: min-of-2 alone still left ~25% of
             # sub-second arms spreading >1.2x across runs (the floor
@@ -170,7 +170,12 @@ def main() -> None:
             prev_took = timings[name]
             for _ in range(2):
                 t0 = time.perf_counter()
-                materialize(QUERIES[name](spark, sf_dir))
+                try:
+                    materialize(QUERIES[name](spark, sf_dir))
+                except Exception as exc:
+                    errors[name] = _error_text(exc)
+                    release_storage()
+                    break
                 took = round(time.perf_counter() - t0, 3)
                 stable = abs(took - prev_took) <= 0.1 * max(took, prev_took)
                 prev_took = took
@@ -236,6 +241,8 @@ def main() -> None:
         "commit": commit,
         "dirty": dirty,
     }
+    if errors:
+        detail["errors"] = errors
     repo = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(repo, "BENCH_DETAIL.json")
     try:
@@ -448,10 +455,12 @@ def main() -> None:
                     row["isolated_samples"] = isolated_samples
                 if isolate_errors:
                     row["isolate_errors"] = isolate_errors
+                if errors:
+                    row["errors"] = errors
                 fh.write(json.dumps(row, sort_keys=True) + "\n")
         except OSError:
             pass
-    for name in names:
+    for name in timings:
         print(json.dumps({"query": name, "sec": timings[name]}))
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:8])
     summary = {
@@ -472,6 +481,8 @@ def main() -> None:
         summary["isolated_samples"] = isolated_samples
     if isolate_errors:
         summary["isolate_errors"] = isolate_errors
+    if errors:
+        summary["errors"] = errors
     print(json.dumps(summary))
     spark.stop()
 

@@ -31,6 +31,16 @@ from mfdb_hafro_etl_spark.exprcache import column_template
 from mfdb_hafro_etl_spark.operators.skew import hot_key_anti_join
 from mfdb_hafro_etl_spark.operators.text import tokens
 from mfdb_hafro_etl_spark.session import _leaf_scan_bytes, pin_to_result
+from mfdb_hafro_etl_spark.sinks.index import (  # noqa: F401 (re-exported write side)
+    _LSH_META,
+    _catalog_meta,
+    _check_params,
+    _read_meta,
+    lsh_index_append,
+    lsh_index_compact,
+    lsh_index_publish_bucketed,
+    lsh_index_write,
+)
 
 
 def _spread_by_id(df: DataFrame, id_col: str, partitions: int | None = None) -> DataFrame:
@@ -1066,316 +1076,9 @@ def duplicate_spans(
 
 
 # ---------------------------------------------------------------------
-# materialized incremental LSH index (standing dedup service)
+# materialized incremental LSH index (standing dedup service): the
+# probe lives here, the write side in sinks.index
 # ---------------------------------------------------------------------
-
-#: index layout version written to _index_meta.json
-_LSH_INDEX_VERSION = 1
-
-
-def _lsh_index_meta_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_index_meta.json")
-
-
-def _lsh_index_write_meta(path: str, params: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(_lsh_index_meta_path(path), "w") as f:
-        json.dump({"version": _LSH_INDEX_VERSION, **params}, f)
-
-
-def _lsh_index_check_meta(path: str, params: dict) -> None:
-    import json
-
-    with open(_lsh_index_meta_path(path)) as f:
-        meta = json.load(f)
-    mismatched = {
-        k: (meta.get(k), v) for k, v in params.items() if meta.get(k) != v
-    }
-    if mismatched:
-        raise ValueError(
-            "LSH index parameter mismatch — an index probed or appended "
-            "with different (n, k, rows_per_band) silently loses recall; "
-            f"index at {path} has {mismatched} (stored, requested). "
-            "Rebuild with lsh_index_write or pass the stored parameters."
-        )
-
-
-def lsh_index_write(
-    corpus: DataFrame,
-    path: str,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    k: int = 8,
-    rows_per_band: int = 2,
-    _mode: str = "overwrite",
-    _bands: DataFrame | None = None,
-    _exact: DataFrame | None = None,
-    _parallel: bool = False,
-) -> None:
-    """Materialize the corpus-side dedup index ONCE: the MinHash band
-    table (``path``/bands, parquet partitioned by band) and the exact
-    content-hash table (``path``/exact: md5, doc id). This is the
-    100 TB shape dedup_against's docstring promises: the corpus side
-    of a standing dedup service is built alongside the corpus and
-    PROBED per increment, never recomputed (cf. reference R dims
-    materialized once and joined per import, R/initdb.R:151).
-
-    Appends (lsh_index_append) add one file set per increment;
-    lsh_index_compact folds the accumulated small files back to scan-
-    efficient sizes (sinks.tables.compact_partitions — partition-local
-    rewrites, never the whole index). The exact table stores RAW
-    (hash, id) rows — min-id resolution happens at probe time over
-    the (increment-sized) matched subset, which keeps appends
-    blind-write-only: no read-modify-write race, idempotent retries
-    by data_source are the caller's replace_by_source pattern.
-    Parameters are pinned in _index_meta.json and validated on every
-    append/probe — probing with mismatched (n, k, rows_per_band)
-    would silently lose recall. At catalog-backed deployments, bucket
-    the band table by ``val`` (sinks.tables.materialize_bucketed) so
-    the probe join is shuffle-free on the corpus side; plain parquet
-    keeps this path-only and hermetic."""
-    import os
-
-    params = {"n": n, "k": k, "rows_per_band": rows_per_band}
-    if _mode != "overwrite":
-        _lsh_index_check_meta(path, params)
-    else:
-        # Rebuilding ONTO an existing index: retire the old meta FIRST,
-        # otherwise a crash between the band/exact rewrites below and the
-        # final meta write leaves the OLD meta validating NEW (possibly
-        # mismatched-parameter) band data — the silent recall loss
-        # _lsh_index_check_meta exists to prevent. With the meta gone,
-        # any partial rebuild fails loudly on the missing-meta path.
-        try:
-            os.remove(_lsh_index_meta_path(path))
-        except FileNotFoundError:
-            pass
-    # _bands/_exact: computed-once reuse for callers that already hold
-    # the batch's band/hash tables (streaming.jobs.dedup_ingest_handler
-    # shares ONE band build across probe, intra-batch dedup, and this
-    # append — recomputing the minhash here tripled the md5 passes)
-    bands = (
-        _bands
-        if _bands is not None
-        else lsh_band_table(corpus, id_col, text_col, n, k, rows_per_band)
-    )
-    exact = (
-        _exact
-        if _exact is not None
-        else corpus.select(
-            F.md5(F.col(text_col)).alias("h"), F.col(id_col).alias("cid")
-        )
-    )
-
-    def _write_bands() -> None:
-        bands.withColumnRenamed(id_col, "cid").write.mode(_mode).partitionBy(
-            "band"
-        ).parquet(os.path.join(path, "bands"))
-
-    def _write_exact() -> None:
-        exact.write.mode(_mode).parquet(os.path.join(path, "exact"))
-
-    if _parallel:
-        # the two subtables are independent: submit both write jobs
-        # concurrently (Spark supports concurrent actions on one
-        # session; the scheduler interleaves their tasks). The meta
-        # write below still happens strictly AFTER both commit, so
-        # the fail-loud half-built-index guarantee is unchanged.
-        # Worth ~1 write latency per increment on the streaming
-        # ingest's micro-batch path.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb, fe = pool.submit(_write_bands), pool.submit(_write_exact)
-            fb.result()
-            fe.result()
-    else:
-        _write_bands()
-        _write_exact()
-    if _mode == "overwrite":
-        # meta is written LAST so a probe never validates against a
-        # half-built index (missing meta fails loudly instead)
-        _lsh_index_write_meta(path, params)
-
-
-def lsh_index_append(
-    batch: DataFrame,
-    path: str,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    k: int = 8,
-    rows_per_band: int = 2,
-    _bands: DataFrame | None = None,
-    _exact: DataFrame | None = None,
-    _parallel: bool = False,
-) -> None:
-    """Append one increment to a materialized dedup index (see
-    lsh_index_write): computes the increment's band + exact rows and
-    blind-appends them — probe-vs-appended-index is row-identical to
-    probe-vs-rebuilt-index (pinned by tests/test_corpus_ops.py)
-    because both probes resolve min-id over the UNION of all appended
-    rows. Run lsh_index_compact periodically: every append adds a
-    file set, and thousand-increment indexes pay per-file footer
-    reads until compacted. ``_bands``/``_exact``: precomputed band /
-    (h, cid) tables for the SAME batch and params (computed-once
-    reuse, see lsh_index_write)."""
-    lsh_index_write(
-        batch,
-        path,
-        id_col,
-        text_col,
-        n,
-        k,
-        rows_per_band,
-        _mode="append",
-        _bands=_bands,
-        _exact=_exact,
-        _parallel=_parallel,
-    )
-
-
-def lsh_index_compact(spark: SparkSession, path: str) -> dict:
-    """Fold accumulated append files back to scan-efficient sizes.
-    Partition-local rewrites only (sinks.tables.compact_partitions);
-    row set is invariant. Returns the per-subtable compaction
-    reports."""
-    import os
-
-    from mfdb_hafro_etl_spark.sinks.tables import compact_partitions
-
-    return {
-        "bands": compact_partitions(spark, os.path.join(path, "bands"), ["band"]),
-        # the exact table is unpartitioned: compact through a
-        # constant pseudo-partition rewrite is not applicable; fold
-        # it by plain rewrite only when fragmented
-        "exact": _compact_flat(spark, os.path.join(path, "exact")),
-    }
-
-
-def _compact_flat(
-    spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict:
-    """Compact an UNPARTITIONED parquet dir: rewrite via a staging
-    dir when files average under target_bytes/2 (same criterion as
-    compact_partitions, without partition pruning — the table is one
-    logical partition)."""
-    import shutil
-    import tempfile
-
-    from mfdb_hafro_etl_spark.sinks.tables import table_file_stats
-
-    stats = table_file_stats(spark, path)
-    n_files = sum(n for _, n, _ in stats)
-    n_bytes = sum(b for _, _, b in stats)
-    if n_files <= 1 or n_bytes / n_files >= target_bytes / 2:
-        return {"compacted": [], "files_before": n_files, "files_after": n_files}
-    import os
-
-    # stage NEXT TO the target (same filesystem) so the swap below is a
-    # pair of atomic renames, never a copy
-    staged = tempfile.mkdtemp(
-        prefix=".compact_flat_", dir=os.path.dirname(path.rstrip("/"))
-    )
-    try:
-        df = spark.read.parquet(path)
-        df.repartition(max(1, 1 + n_bytes // target_bytes)).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        # Swap the staged output into place with directory renames instead
-        # of read(staged)->overwrite(path): Spark's overwrite deletes the
-        # target before committing, so a failure mid-rewrite would destroy
-        # the live exact subtable with no recovery path. Each rename is
-        # atomic; the pair is not — a failure between them rolls back to
-        # the original, and a PROCESS DEATH in that (microsecond) window
-        # leaves the original intact under the .__retired__ name, which
-        # is the manual recovery path. Either way the data always exists
-        # in exactly one committed copy.
-        retired = path.rstrip("/") + ".__retired__"
-        shutil.rmtree(retired, ignore_errors=True)
-        os.rename(path, retired)
-        try:
-            os.rename(staged, path)
-        except BaseException:
-            os.rename(retired, path)  # roll back: original table returns
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    after = sum(n for _, n, _ in table_file_stats(spark, path))
-    return {"compacted": [path], "files_before": n_files, "files_after": after}
-
-
-def lsh_index_publish_bucketed(
-    spark: SparkSession,
-    path: str,
-    table_prefix: str,
-    n_buckets: int = 32,
-) -> None:
-    """Publish a path-backed LSH index (lsh_index_write) into catalog
-    BUCKETED tables, so every probe reads the corpus side
-    SHUFFLE-FREE: ``<prefix>_bands`` bucketed on (band, val) — the
-    probe join's exact keys — and ``<prefix>_exact`` bucketed on the
-    content hash. With bucketing, only the (increment-sized) batch
-    side of each probe join shuffles, into n_buckets; the corpus
-    side's Exchange disappears from the plan (pinned by
-    tests/test_plan_quality.py). The index parameters travel in a
-    one-row ``<prefix>_meta`` table, validated by every catalog
-    probe exactly as the path meta is — publishing can't outrun the
-    parameter guard. Size n_buckets to the deployment: at 100 TB the
-    band table wants hundreds of buckets, each a few GB."""
-    import os
-
-    from mfdb_hafro_etl_spark.sinks.tables import materialize_bucketed
-
-    # validate + load the source index's parameters (loud on missing)
-    import json
-
-    with open(_lsh_index_meta_path(path)) as f:
-        meta = json.load(f)
-    # retire the old meta TABLE first (the lsh_index_write discipline):
-    # a crash between the bands/exact overwrites below and the final
-    # meta write must leave the publication failing loudly on a
-    # missing meta table, never an old meta row validating
-    # mismatched-parameter band data
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_meta")
-    bands = spark.read.parquet(os.path.join(path, "bands"))
-    materialize_bucketed(bands, f"{table_prefix}_bands", ["band", "val"], n_buckets)
-    exact = spark.read.parquet(os.path.join(path, "exact"))
-    materialize_bucketed(exact, f"{table_prefix}_exact", ["h"], n_buckets)
-    from mfdb_hafro_etl_spark.localrel import local_df
-
-    local_df(
-        spark,
-        [(int(meta["version"]), int(meta["n"]), int(meta["k"]), int(meta["rows_per_band"]))],
-        "version INT, n INT, k INT, rows_per_band INT",
-    ).write.mode("overwrite").saveAsTable(f"{table_prefix}_meta")
-
-
-def _lsh_catalog_check_meta(spark: SparkSession, table_prefix: str, params: dict) -> None:
-    rows = spark.table(f"{table_prefix}_meta").collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"LSH catalog index {table_prefix}_meta must hold exactly one "
-            f"row, found {len(rows)} — the published index is torn"
-        )
-    meta = rows[0].asDict()
-    mismatched = {
-        key: (meta.get(key), v) for key, v in params.items() if meta.get(key) != v
-    }
-    if mismatched:
-        raise ValueError(
-            "LSH index parameter mismatch — an index probed with different "
-            f"(n, k, rows_per_band) silently loses recall; catalog index "
-            f"{table_prefix} has {mismatched} (stored, requested)."
-        )
-
 
 def _read_index_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     """Read an index subtable, returning an empty frame with the
@@ -1448,16 +1151,13 @@ def dedup_against_index(
     import os
 
     id_t = batch.schema[id_col].dataType.simpleString()
+    params = {"n": n, "k": k, "rows_per_band": rows_per_band}
     if catalog_prefix is not None:
-        _lsh_catalog_check_meta(
-            spark, catalog_prefix, {"n": n, "k": k, "rows_per_band": rows_per_band}
-        )
+        _check_params(_catalog_meta(spark, catalog_prefix), params, catalog_prefix)
         exact_index = spark.table(f"{catalog_prefix}_exact")
         corpus_bands_src = spark.table(f"{catalog_prefix}_bands")
     else:
-        _lsh_index_check_meta(
-            path, {"n": n, "k": k, "rows_per_band": rows_per_band}
-        )
+        _check_params(_read_meta(path, _LSH_META), params, path)
         # structural empty check, not schema inference: an index
         # bootstrapped from an EMPTY corpus (or one whose docs are all
         # too short to shingle) has subtable dirs with no data files —

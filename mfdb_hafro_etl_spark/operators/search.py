@@ -154,15 +154,21 @@ def tfidf_similar_pairs(
     # both from a 2-thread pool (guide §2.6 — actions are only
     # sequential because driver code calls them sequentially), then
     # fill `weighted` from the already-cached postings. Same rows,
-    # same arithmetic; one serialized full-corpus pass removed.
+    # same arithmetic; one serialized full-corpus pass removed. Both
+    # futures are joined (a failing fill must surface here), and the
+    # threads inherit the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    inherit = inheritable_thread_target(corpus.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_ndocs = pool.submit(
-            lambda: corpus.select(F.countDistinct(id_col)).first()[0]
+            inherit(lambda: corpus.select(F.countDistinct(id_col)).first()[0])
         )
-        pool.submit(postings.count)
+        f_fill = pool.submit(inherit(postings.count))
         n_docs = f_ndocs.result()
+        f_fill.result()
     weighted = (
         postings.withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("term"))

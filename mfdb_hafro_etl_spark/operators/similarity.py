@@ -25,7 +25,16 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from mfdb_hafro_etl_spark.localrel import local_df
+
+from mfdb_hafro_etl_spark.sinks.index import (  # noqa: F401 (re-exported write side)
+    _IVF_META,
+    _catalog_meta,
+    _read_meta,
+    build_ivf_index,
+    ivf_index_append,
+    ivf_index_compact,
+    ivf_index_publish,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -558,370 +567,18 @@ def _ivf_probes(
     ]
 
 
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rebuild: bool = False,
-    kmeans_iters: int = 2,
-) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF index: assign every vector to its nearest
-    centroid and WRITE the table partitioned by ``__cid__``, plus the
-    centroid table alongside. Probes against the materialized index
-    are partition-pruned scans — a query touches n_probe/n_centroids
-    of the data ON DISK, not just in the plan. Build cost is one
-    narrow map + one partitioned write; at 100 TB this is the once-
-    per-corpus indexing job that amortizes over every query.
-
-    Returns the centroid list (also persisted under
-    ``<path>/centroids`` so later sessions can probe without the
-    source table).
-    """
-    import os
-
-    spark = emb.sparkSession
-    # Index builds amortize over every later probe — that's the whole
-    # point of materializing. The assignment is a pure function of the
-    # (immutable) source table and n_centroids, so an existing index at
-    # this path is valid by construction: reuse it unless the caller
-    # forces a rebuild.
-    # The dynamic-partition-overwrite commit protocol writes no
-    # top-level _SUCCESS for the partitioned vectors table, so the
-    # build drops its own marker as the last step; its presence means
-    # both writes committed.
-    import json
-
-    marker = os.path.join(path, "_INDEX_OK")
-    params = {"n_centroids": n_centroids, "kmeans_iters": kmeans_iters}
-    if not rebuild and os.path.exists(marker):
-        # the marker records the build parameters; an index built with
-        # different ones is NOT valid for this call — silently serving
-        # unrefined centroids to a kmeans_iters>0 caller would change
-        # recall with no signal
-        try:
-            with open(marker) as fh:
-                built_with = json.load(fh)
-        except (OSError, ValueError):
-            built_with = None
-        if built_with is not None and all(
-            built_with.get(k) == v for k, v in params.items()
-        ):
-            return [
-                (int(r[0]), [float(x) for x in r[1]])
-                for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
-            ]
-    # rebuilding onto an existing index: retire the old marker FIRST
-    # (the lsh_index_write discipline) so a crash mid-rebuild leaves a
-    # loudly-invalid index, never an old marker validating new data
-    try:
-        os.remove(marker)
-    except FileNotFoundError:
-        pass
-    cents = _ivf_centroids(emb, n_centroids, id_col, vec_col)
-    cents = _kmeans_refine(emb, cents, kmeans_iters, id_col, vec_col)
-    fanned = emb.repartition(spark.sparkContext.defaultParallelism)
-    assigned = _ivf_assign_table(fanned, cents, id_col, vec_col)
-    # Shuffle to the cluster key before the partitioned write:
-    # without it every map task writes a file per cluster it saw
-    # (tasks × n_centroids small files); with it each partition
-    # directory gets files from only the tasks owning that key.
-    # partitionOverwriteMode=static for THIS write, whatever the session
-    # conf says (replace_by_source sets dynamic session-wide): a rebuild
-    # with fewer/refined centroids must truncate ALL old __cid__=
-    # partitions — under dynamic overwrite, cells absent from the new
-    # assignment would keep their stale files behind a fresh marker
-    assigned.repartition(n_centroids, F.col("__cid__")).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy(
-        "__cid__"
-    ).parquet(os.path.join(path, "vectors"))
-    local_df(
-        spark, [(cid, cv) for cid, cv in cents], "cid INT, centroid ARRAY<DOUBLE>"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    # rows_at_build + dims anchor the append-time drift guard
-    # (ivf_index_append): appended vectors keep STALE centroids, so
-    # recall silently degrades as the appended fraction grows
-    rows_at_build = spark.read.parquet(os.path.join(path, "vectors")).count()
-    # build_id gives every (re)build a distinct identity: streaming
-    # ingest (ivf_ingest_handler) tags each batch's commit marker with
-    # it and enforces the recluster budget from the marker SUM for the
-    # CURRENT build only — markers from before a rebuild stop counting
-    # automatically, and no per-batch scan of the standing vectors
-    # table is ever needed (index-size-independent admission)
-    import uuid
-
-    with open(marker, "w") as fh:
-        json.dump(
-            {
-                **params,
-                "rows_at_build": rows_at_build,
-                "dims": len(cents[0][1]) if cents else 0,
-                "build_id": uuid.uuid4().hex,
-            },
-            fh,
-        )
-    return cents
+def _centroid_list(cents: DataFrame) -> list[tuple[int, list[float]]]:
+    """Collect a (cid, centroid) table to the driver-side list the
+    probes and the assign kernel take (dimension-sized)."""
+    return [(int(r[0]), [float(x) for x in r[1]]) for r in cents.collect()]
 
 
-def _ivf_read_marker(path: str) -> dict:
-    """Load the index marker, failing LOUDLY when absent — a missing
-    marker means a half-built or mid-rebuild index, and probing or
-    appending against one silently serves wrong partitions."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_INDEX_OK")) as fh:
-        return json.load(fh)
-
-
-def ivf_index_append(
-    batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_appended_frac: float = 0.25,
-) -> None:
-    """Append one increment of vectors to a materialized IVF index
-    (build_ivf_index) WITHOUT re-clustering: the batch is assigned to
-    the index's EXISTING centroids (the same Arrow matmul kernel as
-    the build) and blind-appended under the matching ``__cid__=``
-    partitions — probe-vs-appended-index is row-identical to
-    probe-vs-rebuilt-with-the-same-centroids (pinned by
-    tests/test_corpus_ops.py), because probes scan whole partitions
-    and scoring within a cell is exact. Appends stay blind-write-only
-    (the lsh_index_append discipline): no read-modify-write of any
-    shared state, so idempotent retries are the caller's
-    replace-by-source pattern, and concurrent increments can't race.
-
-    RECLUSTER POLICY — the honest limit of appending: appended
-    vectors are quantized by STALE centroids. Cells drift away from
-    the data's true density, recall at fixed n_probe degrades
-    silently, and no within-append check can see it (each append is
-    locally correct). The guard is therefore volumetric: when total
-    appended rows would exceed ``max_appended_frac`` of rows_at_build
-    (marker-recorded; current size comes from parquet footer counts,
-    a metadata-only job), the append REFUSES with the rebuild
-    instruction — `build_ivf_index(..., rebuild=True)` re-derives
-    centroids over the full corpus and resets the budget. Pass a
-    bigger fraction to loosen deliberately; there is no warn-and-
-    proceed mode, because a warning in a scheduled pipeline's log is
-    the same as silence. Parameter/shape mismatches (vector dims vs
-    the index's) also refuse loudly.
-
-    Run ivf_index_compact periodically: every append adds ≥1 file
-    per touched cell, and thousand-increment indexes pay per-file
-    footer reads until compacted."""
-    import os
-
-    spark = batch.sparkSession
-    meta = _ivf_read_marker(path)
-    if "rows_at_build" not in meta or "dims" not in meta:
+def _check_query_dims(meta: dict, query_vec: list[float], where: str) -> None:
+    if meta.get("dims") and len(query_vec) != int(meta["dims"]):
         raise ValueError(
-            f"IVF index at {path} was built by an older layout without "
-            "append anchors (rows_at_build/dims) — the drift and shape "
-            "guards cannot run, so appends would silently degrade recall. "
-            "Rebuild once with build_ivf_index(..., rebuild=True)."
+            f"IVF index {where} holds {meta['dims']}-dim vectors; the "
+            f"query vector has {len(query_vec)} dims."
         )
-    first = batch.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    if not first:
-        return  # empty increment: a blind append of nothing is a no-op
-    if first[0]["d"] is None:
-        raise ValueError(
-            f"append batch's first {vec_col} is NULL — IVF assignment is "
-            "undefined for NULL vectors; filter them out upstream"
-        )
-    dims = int(first[0]["d"])
-    if meta.get("dims") and dims != meta["dims"]:
-        raise ValueError(
-            f"IVF index at {path} holds {meta['dims']}-dim vectors; "
-            f"append batch has {dims}-dim vectors — assigning them to "
-            "these centroids is meaningless. Build a separate index."
-        )
-    vectors = os.path.join(path, "vectors")
-    rows_at_build = int(meta.get("rows_at_build", 0))
-    current = spark.read.parquet(vectors).count()
-    batch_rows = batch.count()
-    appended_after = current + batch_rows - rows_at_build
-    if rows_at_build and appended_after > max_appended_frac * rows_at_build:
-        raise ValueError(
-            f"IVF index at {path}: appending {batch_rows} rows would put "
-            f"{appended_after} appended rows over the recluster budget "
-            f"({max_appended_frac:.0%} of {rows_at_build} built rows). "
-            "Appended vectors are quantized by STALE centroids and recall "
-            "degrades silently — rebuild with build_ivf_index(..., "
-            "rebuild=True), or raise max_appended_frac deliberately."
-        )
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
-    ]
-    fanned = batch.repartition(spark.sparkContext.defaultParallelism)
-    assigned = _ivf_assign_table(fanned, cents, id_col, vec_col)
-    assigned.repartition(len(cents), F.col("__cid__")).write.mode(
-        "append"
-    ).partitionBy("__cid__").parquet(vectors)
-
-
-def ivf_index_compact(spark, path: str) -> dict:
-    """Fold append-accumulated small files in the IVF vectors table
-    back to scan-efficient sizes. Partition-local rewrites only
-    (sinks.tables.compact_partitions, dynamic partition overwrite —
-    cells untouched by appends are never rewritten); row set is
-    invariant. Returns the compaction report.
-
-    MUTUAL EXCLUSION with streaming ingest (r9 verdict #5): the
-    streaming handler's exactly-once guarantee depends on each
-    uncommitted batch's deterministic ``ivfb_b<id>.parquet`` files
-    surviving until its commit marker exists — compacting them away
-    inside that crash window would make a redelivery re-append rows
-    the compacted files already hold. The handler marks in-flight
-    batches under ``<path>/_ingest_pending``; compaction REFUSES
-    while any sentinel exists (a crashed-and-never-restarted stream
-    leaves its sentinel behind deliberately: restart the stream so
-    the batch commits, or remove the sentinel manually after
-    verifying the batch's marker exists in the ingest log).
-
-    The exclusion is check-then-act over the filesystem (the handler
-    writes its sentinel before the staging write; this function lists
-    sentinels once before deleting anything) — airtight only under a
-    SINGLE driver operating the index: one ingest stream, compactions
-    issued from the same process between batches. Cross-process
-    concurrent compact-vs-ingest would need a shared lock this
-    deliberately does not implement."""
-    import os
-
-    from mfdb_hafro_etl_spark.sinks.tables import compact_partitions
-
-    pending_dir = os.path.join(path, "_ingest_pending")
-    if os.path.isdir(pending_dir):
-        pending = sorted(os.listdir(pending_dir))
-        if pending:
-            raise RuntimeError(
-                f"IVF index at {path} has in-flight streaming batches "
-                f"{pending} (sentinels under _ingest_pending): compacting "
-                "now could fold uncommitted batch files into compacted "
-                "files, and a crash-window redelivery would then "
-                "DUPLICATE those rows. Let the stream finish (or restart "
-                "it so the batches commit), then compact."
-            )
-    return compact_partitions(spark, os.path.join(path, "vectors"), ["__cid__"])
-
-
-def ivf_index_publish(
-    spark,
-    path: str,
-    table_prefix: str,
-) -> None:
-    """Publish a path-backed IVF index (build_ivf_index) into catalog
-    tables — the ANN mirror of dedup.lsh_index_publish_bucketed, so a
-    standing similarity service probes by TABLE NAME instead of a
-    filesystem path: ``<prefix>_vectors`` saved PARTITIONED on
-    ``__cid__`` (the probe's pruning key — a catalog probe reads
-    n_probe of n_centroids partitions physically, pinned by
-    tests/test_plan_quality.py), ``<prefix>_centroids``
-    (dimension-sized), and a one-row ``<prefix>_meta`` carrying the
-    build parameters + append anchors. Meta is retired FIRST and
-    written LAST (the index-write discipline): a crash mid-publish
-    leaves a publication that fails loudly on the missing meta table,
-    never a stale meta validating mismatched vectors."""
-    import os
-
-    from mfdb_hafro_etl_spark.localrel import local_df
-
-    def _retire(table: str) -> None:
-        # DROP covers a catalog-known table under the current database.
-        # The ORPHAN case — a managed-table location left by an earlier
-        # session whose (in-memory/derby) catalog is gone — is handled
-        # lazily by _save_table below: an unconditional rmtree here
-        # (the r9 shape) would delete an unrelated directory that
-        # merely shares the table's name under the warehouse root
-        # (r9 ADVICE), so nothing is removed unless saveAsTable
-        # actually fails on the stale location.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    def _save_table(writer, table: str) -> None:
-        # saveAsTable, reclaiming an ORPHAN location exactly when it
-        # blocks the write: the retry path fires only on the
-        # location-exists failure (a location the current catalog does
-        # not reference — the DROP above already covered referenced
-        # ones), and the path comes from the catalog's DATABASE
-        # location, not warehouse-root + lowercased name, so non-flat
-        # layouts and db-prefixed names resolve correctly
-        try:
-            writer.saveAsTable(table)
-            return
-        except Exception as exc:
-            msg = str(exc)
-            if "LOCATION_ALREADY_EXISTS" not in msg and "already exists" not in msg:
-                raise
-            # Reclaim ONLY a true orphan: if the catalog still knows the
-            # table (the DROP above didn't apply — e.g. a same-named VIEW
-            # shadowing it, or a concurrent re-create), the location backs
-            # a live table and rmtree would destroy it. Re-raise instead.
-            if spark.catalog.tableExists(table):
-                raise
-        import shutil
-        from urllib.parse import urlparse
-
-        db = table.rsplit(".", 1)[0] if "." in table else spark.catalog.currentDatabase()
-        name = table.rsplit(".", 1)[-1]
-        db_loc = urlparse(spark.catalog.getDatabase(db).locationUri).path
-        if not db_loc:
-            raise RuntimeError(
-                f"cannot reclaim orphan location for {table}: database "
-                f"{db} has a non-filesystem location"
-            )
-        shutil.rmtree(os.path.join(db_loc, name.lower()), ignore_errors=True)
-        writer.saveAsTable(table)
-
-    meta = _ivf_read_marker(path)  # loud on a half-built source index
-    _retire(f"{table_prefix}_meta")
-    _retire(f"{table_prefix}_vectors")
-    _retire(f"{table_prefix}_centroids")
-    vectors = spark.read.parquet(os.path.join(path, "vectors"))
-    n_cents = int(meta.get("n_centroids", 16))
-    _save_table(
-        vectors.repartition(n_cents, F.col("__cid__"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__cid__")
-        .format("parquet"),
-        f"{table_prefix}_vectors",
-    )
-    _save_table(
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .format("parquet"),
-        f"{table_prefix}_centroids",
-    )
-    _save_table(
-        local_df(
-            spark,
-            [
-                (
-                    int(meta.get("n_centroids", 0)),
-                    int(meta.get("kmeans_iters", 0)),
-                    int(meta.get("rows_at_build", 0)),
-                    int(meta.get("dims", 0)),
-                )
-            ],
-            "n_centroids INT, kmeans_iters INT, rows_at_build INT, dims INT",
-        ).write.mode("overwrite").format("parquet"),
-        f"{table_prefix}_meta",
-    )
-
-
-def _ivf_catalog_meta(spark, table_prefix: str) -> dict:
-    rows = spark.table(f"{table_prefix}_meta").collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"IVF catalog index {table_prefix}_meta must hold exactly one "
-            f"row, found {len(rows)} — the published index is torn"
-        )
-    return rows[0].asDict()
 
 
 def ann_ivf_topk_catalog(
@@ -941,16 +598,8 @@ def ann_ivf_topk_catalog(
     of ann_ivf_topk_indexed), and the meta row guards dims so a
     query vector of the wrong dimensionality refuses instead of
     scoring garbage."""
-    meta = _ivf_catalog_meta(spark, table_prefix)
-    if meta.get("dims") and len(query_vec) != int(meta["dims"]):
-        raise ValueError(
-            f"IVF catalog index {table_prefix} holds {meta['dims']}-dim "
-            f"vectors; the query vector has {len(query_vec)} dims."
-        )
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in spark.table(f"{table_prefix}_centroids").collect()
-    ]
+    _check_query_dims(_catalog_meta(spark, table_prefix), query_vec, table_prefix)
+    cents = _centroid_list(spark.table(f"{table_prefix}_centroids"))
     probes = _ivf_probes(cents, query_vec, n_probe)
     idx = spark.table(f"{table_prefix}_vectors")
     scored = _cosine_score_table(
@@ -976,13 +625,13 @@ def ann_ivf_topk_indexed(
     dimension-sized), then scan ONLY those clusters' partitions —
     `.explain` shows PartitionFilters on ``__cid__`` and a
     PartitionCount of n_probe, so the pruning is physical, not
-    logical."""
+    logical. The meta file guards the probe exactly as the catalog
+    twin's meta row does: a torn index (no meta) and a query vector of
+    the wrong dimensionality refuse instead of scoring garbage."""
     import os
 
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
-    ]
+    _check_query_dims(_read_meta(path, _IVF_META), query_vec, path)
+    cents = _centroid_list(spark.read.parquet(os.path.join(path, "centroids")))
     probes = _ivf_probes(cents, query_vec, n_probe)
     idx = spark.read.parquet(os.path.join(path, "vectors"))
     scored = _cosine_score_table(

@@ -720,8 +720,8 @@ def dedup_ingest_handler(
     from mfdb_hafro_etl_spark.operators.dedup import (
         dedup_against_index,
         lsh_band_table,
-        lsh_index_append,
     )
+    from mfdb_hafro_etl_spark.sinks.index import lsh_index_append
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -908,7 +908,6 @@ def dedup_ingest_handler(
                             _exact=b_hash.join(
                                 flagged, on=id_col, how="left_anti"
                             ).select("h", F.col(id_col).alias("cid")),
-                            _parallel=True,
                         )
 
                     def _write_verdicts() -> None:
@@ -918,11 +917,16 @@ def dedup_ingest_handler(
 
                     from concurrent.futures import ThreadPoolExecutor
 
+                    from pyspark.util import inheritable_thread_target
+
+                    inherit = inheritable_thread_target(spark)
                     with ThreadPoolExecutor(max_workers=2) as pool:
-                        fa = pool.submit(_append_index)
-                        fv = pool.submit(_write_verdicts)
-                        fa.result()
-                        fv.result()
+                        futures = [
+                            pool.submit(inherit(w))
+                            for w in (_append_index, _write_verdicts)
+                        ]
+                        for f in futures:
+                            f.result()
                 finally:
                     verdicts.unpersist()
         finally:
@@ -953,7 +957,7 @@ def stream_dedup_ingest(
     online closure of the dedup family's batch topology (one-shot
     pairs -> incremental probe -> materialized index -> this): every
     micro-batch is probed against the materialized LSH index
-    (operators.dedup.lsh_index_write), deduplicated within itself
+    (sinks.index.lsh_index_write), deduplicated within itself
     (min id wins), and its novel documents are appended to the index
     so batch N+1 dedups against everything admitted through batch N.
     The index must exist (bootstrap = lsh_index_write on the initial
@@ -1032,441 +1036,77 @@ def ivf_ingest_handler(
     EXACTLY-ONCE appends, strictly stronger than the LSH ingest
     handler's at-least-once-absorbed-by-min-id: duplicate vector rows
     have no absorbing resolution (a top-k probe would return the same
-    id twice), so the append is made convergent instead of absorbable
-    — the batch's assignment is staged to a scratch directory, then
-    each cell's single data file is os.replace'd into the vectors
-    table under a DETERMINISTIC per-(batch, cell) name
-    (``ivfb_b<batch_id>.parquet``). A crash-window redelivery
-    re-stages the identical row set (assignment is a pure function of
-    batch content and the index's frozen centroids) and re-replaces
-    the same file names: the vectors table converges to exactly one
-    copy of the batch no matter how many times the batch is
-    delivered. The marker under ``<log_dir>/_commits`` short-circuits
-    the normal redelivery; the rename discipline covers the window
-    the marker can't.
-
-    The volumetric recluster budget is enforced PER BATCH from the
-    COMMIT LOG, not the standing table (r9 verdict #2): each batch's
-    marker records its appended-row count tagged with the index's
-    build_id, and admission sums the markers for the CURRENT build —
-    O(#batches) driver-side reads, independent of index size. The
-    r9 shape (spark.read.parquet(vectors).count() plus a crash-window
-    glob every micro-batch) listed and footer-read every file of the
-    standing index per batch, which at a 100 TB index with 10⁵-10⁶
-    files becomes the ingest's dominant fixed cost. Semantics are
-    unchanged: a redelivered batch has no marker (its prior
-    crash-window files are overwritten by the deterministic renames,
-    so they must NOT count), markers from before a rebuild carry a
-    stale build_id and stop counting automatically, and availableNow
-    replays batches in order so every batch < N is marker-committed
-    when batch N is admitted. Legacy indexes (no build_id) and legacy
-    markers (pre-r10 "ok" bodies) fall back to the table-count path
-    once, loudly correct rather than silently wrong. When the budget
-    would be exceeded the handler RAISES — failing the stream loudly
-    mid-run — because appended vectors are quantized by stale
-    centroids and recall degrades silently past the budget (the r8
-    no-warn-and-proceed discipline). Rebuild with
-    build_ivf_index(..., rebuild=True), which resets the budget (new
-    build_id), then restart the stream."""
-    import glob
+    id twice), so the append is made convergent instead. Each batch
+    runs the one IVF append routine (sinks.index._ivf_append, shared
+    with ivf_index_append) under a token derived from ``log_dir`` and
+    the batch_id: one aggregate probe, admission against the index's
+    append ledger (batch and stream appends count against the same
+    recluster budget, without scanning the standing vectors table),
+    then the staged write and the deterministic per-cell rename. A
+    crash-window redelivery re-stages the identical rows under the
+    same names and overwrites its own ledger record, so the vectors
+    table converges to one copy and the budget counts the batch once.
+    The marker under ``<log_dir>/_commits`` short-circuits the normal
+    redelivery; the rename discipline covers the window the marker
+    can't. Past the budget the handler RAISES, failing the stream
+    loudly mid-run; rebuild with build_ivf_index(..., rebuild=True),
+    which resets the budget (new build_id), then restart the
+    stream."""
     import json
     import shutil
 
-    from mfdb_hafro_etl_spark.operators.similarity import (
-        _ivf_assign_table,
-        _ivf_read_marker,
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mfdb_hafro_etl_spark.sinks.index import (
+        _clear_pending,
+        _ivf_append,
+        _stream_token,
     )
 
-    # centroids are FROZEN per index build (that is the append
-    # invariant the whole ingest rests on), so collecting them once
-    # per build_id and reusing the driver-local list across this
-    # stream's micro-batches is semantically free and removes one
-    # read+collect job per batch (guide §5: fewer driver actions).
-    # Keyed by build_id: a mid-stream rebuild (new build_id in the
-    # re-read meta) misses the memo and re-collects; legacy indexes
-    # without a build_id never memoize. Scoped to this handler
-    # closure — one stream run — so nothing persists across runs.
+    # centroids are FROZEN per index build, so collecting them once per
+    # build_id and reusing the list across this stream's micro-batches
+    # is semantically free and removes one read+collect job per batch.
+    # Scoped to this handler closure — one stream run.
     cents_memo: dict[str, list] = {}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        token = _stream_token(log_dir, batch_id)
         marker = os.path.join(log_dir, "_commits", str(batch_id))
-        # compaction mutual exclusion (r9 verdict #5): the exactly-once
-        # proof relies on this batch's deterministic ivfb_b<id>.parquet
-        # names SURVIVING until the commit marker exists — if
-        # ivf_index_compact consumed them inside the crash window, a
-        # redelivery would re-append rows the compacted files already
-        # hold. The sentinel under <index>/_ingest_pending is written
-        # before the first rename and removed only after the marker is
-        # durable; ivf_index_compact refuses while any sentinel exists.
-        pending = os.path.join(
-            index_path, "_ingest_pending", f"b{batch_id}"
-        )
         if os.path.exists(marker):
             # a crash between the marker write and the sentinel removal
             # leaves the sentinel behind; the short-circuit clears it so
             # compaction unblocks without operator intervention
-            try:
-                os.remove(pending)
-            except FileNotFoundError:
-                pass
+            _clear_pending(index_path, token)
             return
-        meta = _ivf_read_marker(index_path)  # loud on a torn index
-        if "rows_at_build" not in meta or "dims" not in meta:
-            raise ValueError(
-                f"IVF index at {index_path} lacks append anchors "
-                "(rows_at_build/dims) — rebuild with "
-                "build_ivf_index(..., rebuild=True) before streaming into it."
-            )
-        batch = batch_df.persist()
-        try:
-            # ONE aggregation job answers row count AND the dim probe
-            # (was count + limit(1).collect — two serialized jobs per
-            # micro-batch on the same persisted batch; guide §5). The
-            # batch's persist fills during this job, so the staging
-            # write below reads cache. size(NULL array) is -1 under
-            # Spark's default legacy sizeOfNull, and min() skips SQL
-            # NULLs, so dmin == -1 ⇔ some vector is NULL.
-            stats = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(F.size(F.col(vec_col))).alias("dmin"),
-                F.max(F.size(F.col(vec_col))).alias("dmax"),
-                F.sum(F.col(vec_col).isNull().cast("int")).alias("nnull"),
-            ).collect()[0]
-            n_rows = int(stats["n"])
-            n_cells = 0
-            if n_rows:
-                dmin, dmax = stats["dmin"], stats["dmax"]
-                # size(NULL) is -1 under legacy sizeOfNull and NULL
-                # under ANSI; the explicit null count covers both (and
-                # catches a mixed batch the old first-row probe passed
-                # through to an opaque numpy failure)
-                if int(stats["nnull"] or 0) > 0 or dmin is None or int(dmin) < 0:
-                    raise ValueError(
-                        f"stream batch {batch_id}: a {vec_col} is NULL — "
-                        "IVF assignment is undefined; filter upstream"
-                    )
-                if meta.get("dims") and (
-                    int(dmin) != int(meta["dims"]) or int(dmax) != int(meta["dims"])
-                ):
-                    raise ValueError(
-                        f"IVF index at {index_path} holds {meta['dims']}-dim "
-                        f"vectors; stream batch {batch_id} has "
-                        f"{dmin}..{dmax}-dim vectors."
-                    )
-                token = f"b{batch_id}"
-                vectors = os.path.join(index_path, "vectors")
-                rows_at_build = int(meta["rows_at_build"])
-                build_id = meta.get("build_id")
-                commits_dir = os.path.join(log_dir, "_commits")
-                committed = 0
-                legacy = build_id is None
-                if not legacy and os.path.isdir(commits_dir):
-                    for mname in os.listdir(commits_dir):
-                        if mname.endswith(".tmp"):
-                            continue
-                        try:
-                            with open(os.path.join(commits_dir, mname)) as fh:
-                                rec = json.loads(fh.read())
-                        except (OSError, ValueError):
-                            # pre-r10 "ok" marker: its appended count is
-                            # unknowable from the log — fall back to the
-                            # table-count path for this admission
-                            legacy = True
-                            break
-                        if rec.get("build_id") == build_id:
-                            committed += int(rec.get("n_appended", 0))
-                if legacy:
-                    # index or markers predate commit-log accounting:
-                    # the r9 table-scan path, correct but O(index files).
-                    # Loud (r10 verdict wrong #2): without the warning a
-                    # long-lived stream silently pays this on EVERY
-                    # batch forever; the backfill upgrades it once.
-                    import warnings
-
-                    warnings.warn(
-                        f"IVF ingest batch {batch_id} at {index_path}: "
-                        "commit-log admission unavailable (pre-r10 index "
-                        "or unreadable marker) — falling back to the "
-                        "O(index-files) table-count path for this and "
-                        "every future batch. Run "
-                        "ivf_markers_backfill(spark, index_path, log_dir) "
-                        "once to upgrade to marker-only admissions.",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                    prior = glob.glob(
-                        os.path.join(
-                            vectors, "__cid__=*", f"ivfb_{token}.parquet"
-                        )
-                    )
-                    n_prior = (
-                        spark.read.parquet(*prior).count() if prior else 0
-                    )
-                    current = spark.read.parquet(vectors).count()
-                    committed = current - n_prior - rows_at_build
-                appended_after = committed + n_rows
-                if rows_at_build and appended_after > max_appended_frac * rows_at_build:
-                    raise ValueError(
-                        f"IVF streaming ingest at batch {batch_id}: appending "
-                        f"{n_rows} rows would put {appended_after} appended "
-                        f"rows over the recluster budget "
-                        f"({max_appended_frac:.0%} of {rows_at_build} built "
-                        "rows); appended vectors are quantized by STALE "
-                        "centroids. Rebuild with build_ivf_index(..., "
-                        "rebuild=True) and restart the stream, or raise "
-                        "max_appended_frac deliberately."
-                    )
-                cents = cents_memo.get(build_id) if build_id else None
-                if cents is None:
-                    cents = [
-                        (int(r[0]), [float(x) for x in r[1]])
-                        for r in spark.read.parquet(
-                            os.path.join(index_path, "centroids")
-                        ).collect()
-                    ]
-                    if build_id:
-                        cents_memo.clear()  # one build live at a time
-                        cents_memo[build_id] = cents
-                # Width for the assign kernel derived from the batch's
-                # OWN volume (n_rows × vector bytes / 64 KB-per-task,
-                # the session._KERNEL_BYTES_PER_TASK budget), capped at
-                # defaultParallelism — the unconditional repartition(
-                # defaultParallelism) forced a 32-way scatter (and 32
-                # Python workers) under kilobyte micro-batches, and at
-                # scale the cap reproduces the old width exactly.
-                dims = int(meta.get("dims") or 0) or (
-                    len(cents[0][1]) if cents else 1
-                )
-                est_bytes = n_rows * (dims * 8 + 16)
-                par = spark.sparkContext.defaultParallelism
-                width = max(1, min(par, -(-est_bytes // (64 << 10))))
-                fanned = batch.repartition(width)
-                assigned = _ivf_assign_table(fanned, cents, id_col, vec_col)
-                staging = os.path.join(index_path, "_staging", token)
-                # block compaction from BEFORE the staging write until
-                # the marker is durable: renamed-but-uncommitted batch
-                # files must not be folded into compacted files. Writing
-                # the sentinel first (r10 wrote it between staging and
-                # rename) shrinks the check-then-act race with
-                # ivf_index_compact to the compactor's own
-                # listdir-to-first-delete gap; full mutual exclusion
-                # still assumes a SINGLE driver operating the index
-                # (one ingest stream, compactions run from the same
-                # process) — there is no shared lock across processes.
-                # A crashed run leaves the sentinel; redelivery of the
-                # same batch_id re-creates/removes it on the marker
-                # path (orphan clearing pinned by
-                # tests/test_streaming_ingest.py).
-                os.makedirs(os.path.dirname(pending), exist_ok=True)
-                with open(pending, "w") as fh:
-                    fh.write(token)
-                (
-                    assigned.repartition(len(cents), F.col("__cid__"))
-                    .write.mode("overwrite")
-                    .partitionBy("__cid__")
-                    .parquet(staging)
-                )
-                for cdir in sorted(os.listdir(staging)):
-                    if not cdir.startswith("__cid__="):
-                        continue
-                    parts = [
-                        f
-                        for f in os.listdir(os.path.join(staging, cdir))
-                        if f.endswith(".parquet")
-                    ]
-                    if len(parts) != 1:
-                        # repartition-by-key writes exactly one file per
-                        # cell; >1 would break name determinism (and so
-                        # convergence) — refuse rather than duplicate
-                        raise RuntimeError(
-                            f"staged cell {cdir} holds {len(parts)} data "
-                            "files (expected 1) — maxRecordsPerFile or a "
-                            "changed write path broke the exactly-once "
-                            "rename discipline"
-                        )
-                    dest_dir = os.path.join(vectors, cdir)
-                    os.makedirs(dest_dir, exist_ok=True)
-                    os.replace(
-                        os.path.join(staging, cdir, parts[0]),
-                        os.path.join(dest_dir, f"ivfb_{token}.parquet"),
-                    )
-                    n_cells += 1
-                shutil.rmtree(staging, ignore_errors=True)
-            # the per-batch log record is ONE driver-local row: write
-            # it with pyarrow directly instead of running a whole
-            # Spark write job per micro-batch (guide §5 — the row
-            # never leaves the driver either way; the read-back is a
-            # plain partitioned parquet scan in both shapes). tmp +
-            # os.replace keeps the per-batch overwrite atomic.
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            bdir = os.path.join(log_dir, f"batch_id={batch_id}")
-            shutil.rmtree(bdir, ignore_errors=True)
-            os.makedirs(bdir, exist_ok=True)
-            tbl = pa.table(
-                {
-                    "n_appended": pa.array([n_rows], pa.int64()),
-                    "n_cells": pa.array([n_cells], pa.int32()),
-                }
-            )
-            tmp_log = os.path.join(bdir, ".part-0.parquet.tmp")
-            pq.write_table(tbl, tmp_log)
-            os.replace(tmp_log, os.path.join(bdir, "part-0.parquet"))
-        finally:
-            batch.unpersist()
+        rec, n_cells = _ivf_append(
+            batch_df, index_path, token, id_col, vec_col, max_appended_frac,
+            f"stream batch {batch_id}", cents_memo,
+        )
+        # the per-batch log record is ONE driver-local row: write it
+        # with pyarrow directly instead of running a Spark write job per
+        # micro-batch. tmp + os.replace keeps the overwrite atomic.
+        bdir = os.path.join(log_dir, f"batch_id={batch_id}")
+        shutil.rmtree(bdir, ignore_errors=True)
+        os.makedirs(bdir, exist_ok=True)
+        tbl = pa.table(
+            {
+                "n_appended": pa.array([rec["n_appended"]], pa.int64()),
+                "n_cells": pa.array([n_cells], pa.int32()),
+            }
+        )
+        tmp_log = os.path.join(bdir, ".part-0.parquet.tmp")
+        pq.write_table(tbl, tmp_log)
+        os.replace(tmp_log, os.path.join(bdir, "part-0.parquet"))
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
-            # the marker IS the commit log: n_appended tagged with the
-            # build it was appended under, so later batches enforce the
-            # recluster budget from the marker sum without scanning the
-            # standing vectors table
-            json.dump(
-                {"n_appended": n_rows, "build_id": meta.get("build_id")}, fh
-            )
+            json.dump(rec, fh)
         os.replace(tmp, marker)
         # marker durable -> this batch's files may now be compacted
-        try:
-            os.remove(pending)
-        except FileNotFoundError:
-            pass
+        _clear_pending(index_path, token)
 
     return handle
-
-
-def ivf_markers_backfill(
-    spark: SparkSession, index_path: str, log_dir: str
-) -> dict:
-    """One-shot upgrade of a legacy IVF ingest log to commit-log
-    admissions (r10 verdict missing #2): a pre-r10 index (no
-    ``build_id`` in its meta) or a single unreadable/pre-r10 "ok"
-    commit marker flips ivf_ingest_handler's budget admission to the
-    O(index-files) table-count path on EVERY subsequent batch. This
-    pays that table count exactly ONCE more, then the stream runs on
-    marker-only admissions:
-
-    - a meta without ``build_id`` gets one stamped in (atomic
-      tmp+replace of the index marker);
-    - every unreadable marker is rewritten in place as
-      ``{"n_appended": 0, "build_id": <current>, "backfilled": true}``
-      — commit EXISTENCE (what the exactly-once short-circuit checks)
-      is preserved, and the rows those batches appended are carried by
-      the synthetic marker below;
-    - one synthetic ``backfill`` marker records the residual
-      ``current_count - rows_at_build - sum(readable markers for the
-      current build)``, so the marker sum equals the true appended
-      delta again. The name cannot collide with a batch marker (those
-      are stringified integers), and re-running the backfill is
-      idempotent: the synthetic marker is excluded from the residual
-      computation and rewritten whole.
-
-    Run it with the stream STOPPED — like compaction, this is a
-    single-operator administrative action with no cross-process lock,
-    and like compaction it REFUSES while _ingest_pending sentinels
-    exist (an uncommitted batch's rows would otherwise be counted in
-    the synthetic marker AND again at redelivery). Returns a report
-    dict."""
-    import json
-    import uuid
-
-    from mfdb_hafro_etl_spark.operators.similarity import _ivf_read_marker
-
-    # MUTUAL EXCLUSION with in-flight batches (mirrors
-    # ivf_index_compact, r11 ADVICE low): a crashed batch that renamed
-    # its files but never committed leaves a sentinel; its rows are in
-    # vectors/ with no marker, so the residual below would fold them
-    # into the synthetic marker AND the batch's redelivery would write
-    # its own marker for the same rows — double-counting the budget
-    # sum. Refuse until the stream finishes (or the sentinel is
-    # removed after verifying the batch's marker exists).
-    pending_dir = os.path.join(index_path, "_ingest_pending")
-    if os.path.isdir(pending_dir):
-        pending = sorted(os.listdir(pending_dir))
-        if pending:
-            raise RuntimeError(
-                f"IVF index at {index_path} has in-flight streaming "
-                f"batches {pending} (sentinels under _ingest_pending): "
-                "their renamed-but-uncommitted rows would be folded into "
-                "the synthetic backfill marker and then double-counted "
-                "when the batch redelivers. Let the stream finish (or "
-                "restart it so the batches commit), then backfill."
-            )
-
-    meta = _ivf_read_marker(index_path)  # loud on a torn index
-    build_id = meta.get("build_id")
-    stamped = False
-    if build_id is None:
-        build_id = uuid.uuid4().hex
-        meta["build_id"] = build_id
-        marker = os.path.join(index_path, "_INDEX_OK")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, marker)
-        stamped = True
-    commits_dir = os.path.join(log_dir, "_commits")
-    os.makedirs(commits_dir, exist_ok=True)
-    n_rewritten = 0
-    committed = 0
-    for mname in sorted(os.listdir(commits_dir)):
-        if mname.endswith(".tmp") or mname == "backfill":
-            continue
-        mpath = os.path.join(commits_dir, mname)
-        try:
-            with open(mpath) as fh:
-                rec = json.loads(fh.read())
-            # valid-but-non-dict JSON (e.g. a bare `5`) is as legacy as
-            # unparseable bytes: `"n_appended" in 5` would raise
-            # TypeError (r11 ADVICE low) — rewrite it like the rest
-            if not isinstance(rec, dict) or "n_appended" not in rec:
-                rec = None
-        except (OSError, ValueError):
-            rec = None
-        if rec is None:
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {"n_appended": 0, "build_id": build_id, "backfilled": True},
-                    fh,
-                )
-            os.replace(tmp, mpath)
-            n_rewritten += 1
-        elif rec.get("build_id") == build_id:
-            committed += int(rec.get("n_appended", 0))
-    rows_at_build = int(meta.get("rows_at_build", 0))
-    current = spark.read.parquet(os.path.join(index_path, "vectors")).count()
-    delta = current - rows_at_build - committed
-    if delta < 0:
-        import warnings
-
-        warnings.warn(
-            f"ivf_markers_backfill at {index_path}: readable markers for "
-            f"build {build_id} already account for {committed} appended "
-            f"rows but the table holds only {current - rows_at_build} "
-            "beyond the build — vectors files were removed outside the "
-            "ingest path. Clamping the synthetic marker to 0; audit the "
-            "index.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        delta = 0
-    synth = os.path.join(commits_dir, "backfill")
-    tmp = synth + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"n_appended": int(delta), "build_id": build_id, "backfilled": True},
-            fh,
-        )
-    os.replace(tmp, synth)
-    return {
-        "build_id": build_id,
-        "stamped_build_id": stamped,
-        "n_rewritten": n_rewritten,
-        "backfilled_rows": int(delta),
-        "committed_in_log": committed,
-    }
 
 
 def stream_ivf_ingest(
@@ -1479,7 +1119,7 @@ def stream_ivf_ingest(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Streaming embedding ingestion into a STANDING materialized IVF
-    index (similarity.build_ivf_index) — the ANN mirror of
+    index (sinks.index.build_ivf_index) — the ANN mirror of
     stream_dedup_ingest, closing the standing-service symmetry: every
     micro-batch is assigned to the index's frozen centroids and
     appended exactly-once (staged write + deterministic per-cell
@@ -1497,12 +1137,14 @@ def stream_ivf_ingest(
     tests/test_corpus_ops.py and for this streaming path by
     tests/test_streaming_ingest.py).
 
-    Scale shape: each micro-batch costs one assignment map over its
-    own rows (Arrow matmul vs dimension-sized broadcast centroids),
-    one increment-sized shuffle into cells, and two footer-count
-    metadata jobs for the budget — nothing rescans the standing
-    vectors. One in-flight ingest per index (the rename discipline is
-    per-batch-serial by the stream's own semantics)."""
+    Scale shape: each micro-batch costs one aggregate probe, one
+    assignment map over its own rows (Arrow matmul vs dimension-sized
+    broadcast centroids) and one increment-sized shuffle into cells;
+    the budget is read from the index's append ledger, so nothing
+    rescans the standing vectors. Streams with distinct ``log_dir``s
+    and batch ivf_index_append calls may take turns on one index: their
+    tokens never collide, and all of them count against one budget.
+    Admission is check-then-act, so run one append at a time."""
     spark = stream_df.sparkSession
     with _scoped_state_partitions(spark, state_partitions):
         q = (

@@ -432,6 +432,27 @@ def test_tfidf_max_df_gate_blocks_stop_terms(spark):
     assert srch.tfidf_similar_pairs(df, threshold=0.0, max_df=1).count() == 0
 
 
+def test_tfidf_postings_fill_failure_surfaces(spark, monkeypatch):
+    """The postings cache fill runs on a pool thread beside the doc
+    count; its future is joined, so a failure there raises from
+    tfidf_similar_pairs instead of being swallowed."""
+    import threading
+
+    df = spark.createDataFrame(
+        [(1, "apple banana"), (2, "apple cherry")], "doc_id BIGINT, text STRING"
+    )
+    real_count = type(df).count
+
+    def count(self):
+        if threading.current_thread() is not threading.main_thread():
+            raise RuntimeError("simulated postings fill failure")
+        return real_count(self)
+
+    monkeypatch.setattr(type(df), "count", count)
+    with pytest.raises(RuntimeError, match="simulated postings fill failure"):
+        srch.tfidf_similar_pairs(df, threshold=0.0, max_df=10)
+
+
 # ------------------------------------------------------- k-means
 def test_kmeans_assign_moves_boundary_point(spark):
     # seeds are the 2 lowest ids: (0,[0,0... wait vectors must be non-zero
@@ -1187,6 +1208,33 @@ def test_lsh_index_append_equals_rebuild(spark, tmp_path):
         dd.lsh_index_append(batch, appended, "doc_id", "text", n=5)
 
 
+def test_lsh_index_append_jobs_keep_callers_job_group(spark, tmp_path):
+    """The two subtable writes run on pool threads that inherit the
+    caller's job group: every job of the append is attributed to it,
+    none runs ungrouped."""
+    from mfdb_hafro_etl_spark.operators import dedup as dd
+
+    path = str(tmp_path / "idx")
+    corpus = spark.createDataFrame(
+        [(1, "a document for the job group fixture")], "doc_id long, text string"
+    )
+    dd.lsh_index_write(corpus, path, "doc_id", "text")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("g", "lsh append")
+    try:
+        dd.lsh_index_append(
+            corpus.withColumn("doc_id", F.col("doc_id") + 1), path, "doc_id", "text"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("g")
+    # the tracker may evict old jobs, so check for NEW ungrouped ones
+    assert not set(tracker.getJobIdsForGroup()) - ungrouped
+
+
 def test_lsh_index_compact_invariant(spark, tmp_path):
     """Compaction folds append-accumulated small files without
     changing a single row of either subtable, and probes answer
@@ -1306,7 +1354,7 @@ def test_compact_flat_swaps_atomically(spark, tmp_path):
     residue survives a successful compaction (ADVICE r7)."""
     import os
 
-    from mfdb_hafro_etl_spark.operators.dedup import _compact_flat
+    from mfdb_hafro_etl_spark.sinks.index import _compact_flat
 
     path = str(tmp_path / "exact")
     for i in range(4):
@@ -1378,9 +1426,10 @@ def test_ivf_index_append_equals_rebuild(spark, tmp_path):
 
 
 def test_ivf_index_append_guards(spark, tmp_path):
-    """Mismatch + drift guards: a half-built index (no marker) fails
-    loudly; a dims mismatch refuses; exceeding the recluster budget
-    refuses with the rebuild instruction; rebuild resets the budget."""
+    """Mismatch + drift guards: a half-built index (no meta) fails
+    loudly on append and probe; a dims mismatch refuses on append and
+    probe; exceeding the recluster budget refuses with the rebuild
+    instruction; rebuild resets the budget."""
     import pytest
 
     from mfdb_hafro_etl_spark.operators import similarity as sim
@@ -1389,10 +1438,12 @@ def test_ivf_index_append_guards(spark, tmp_path):
     path = str(tmp_path / "idx")
     sim.build_ivf_index(base, path, n_centroids=4, kmeans_iters=0)
 
-    # dims mismatch
+    # dims mismatch, on append and on probe
     bad = _ivf_fixture(spark, 3, dims=4, id0=500)
     with pytest.raises(ValueError, match="dim"):
         sim.ivf_index_append(bad, path)
+    with pytest.raises(ValueError, match="dim"):
+        sim.ann_ivf_topk_indexed(spark, path, [0.1] * 4)
 
     # recluster budget: 20 built rows, default frac 0.25 -> 6 rows over
     big = _ivf_fixture(spark, 6, id0=600)
@@ -1415,6 +1466,8 @@ def test_ivf_index_append_guards(spark, tmp_path):
     os.remove(os.path.join(path, "_INDEX_OK"))
     with pytest.raises(FileNotFoundError):
         sim.ivf_index_append(small, path)
+    with pytest.raises(FileNotFoundError):
+        sim.ann_ivf_topk_indexed(spark, path, [0.1] * 8)
 
 
 def test_ivf_index_compact_invariant(spark, tmp_path):
@@ -1657,7 +1710,7 @@ def test_compact_flat_rollback_on_failed_swap(spark, tmp_path, monkeypatch):
 
     import pytest
 
-    from mfdb_hafro_etl_spark.operators.dedup import _compact_flat
+    from mfdb_hafro_etl_spark.sinks.index import _compact_flat
 
     path = str(tmp_path / "exact")
     for i in range(4):
@@ -1685,14 +1738,9 @@ def test_compact_flat_rollback_on_failed_swap(spark, tmp_path, monkeypatch):
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
 
 
-def test_ivf_append_empty_and_legacy_marker(spark, tmp_path):
-    """Empty increments are a clean no-op; markers predating the
-    append anchors refuse loudly instead of silently skipping the
-    drift/shape guards (self-review r8)."""
-    import json
+def test_ivf_append_empty_is_noop(spark, tmp_path):
+    """Empty increments are a clean no-op (self-review r8)."""
     import os
-
-    import pytest
 
     from mfdb_hafro_etl_spark.operators import similarity as sim
 
@@ -1703,16 +1751,6 @@ def test_ivf_append_empty_and_legacy_marker(spark, tmp_path):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     sim.ivf_index_append(empty, path)  # no-op, no crash
     assert spark.read.parquet(vec).count() == before
-
-    # legacy marker (no rows_at_build/dims) -> guards can't run -> loud
-    marker = os.path.join(path, "_INDEX_OK")
-    with open(marker) as fh:
-        meta = json.load(fh)
-    legacy = {k: v for k, v in meta.items() if k in ("n_centroids", "kmeans_iters")}
-    with open(marker, "w") as fh:
-        json.dump(legacy, fh)
-    with pytest.raises(ValueError, match="older layout"):
-        sim.ivf_index_append(_ivf_fixture(spark, 2, id0=500), path)
 
 
 def test_ivf_rebuild_truncates_stale_cells(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mfdb_hafro_etl_spark.catalog import load_table
@@ -764,6 +765,47 @@ def test_ivf_ingest_handler_rejects_dim_mismatch(spark, tmp_path):
         handle(_emb_df(spark, range(0, 4), dim=5), 0)
 
 
+def test_ivf_batch_and_stream_appends_share_one_budget(spark, tmp_path):
+    """Batch ivf_index_append and the streaming handler admit against
+    ONE append ledger in the index directory: 12 batch-appended rows
+    plus a 12-row stream batch exceed a 20-row budget (50% of 40), so
+    the stream must refuse even though its own log holds no marker."""
+    from mfdb_hafro_etl_spark.operators.similarity import ivf_index_append
+    from mfdb_hafro_etl_spark.streaming.jobs import ivf_ingest_handler
+
+    path = _build_ivf(spark, tmp_path)  # 40 built rows
+    ivf_index_append(_emb_df(spark, range(0, 12)), path, max_appended_frac=0.5)
+    handle = ivf_ingest_handler(path, str(tmp_path / "log_shared"), max_appended_frac=0.5)
+    with pytest.raises(ValueError, match="recluster budget"):
+        handle(_emb_df(spark, range(12, 24)), 0)
+    assert len(_vec_rows(spark, path)) == 52
+
+
+@pytest.mark.parametrize("bad", ["null", "dims"])
+def test_ivf_batch_append_validates_every_row_like_the_stream(spark, tmp_path, bad):
+    """The batch append runs the stream's aggregate probe, so a NULL
+    vector or a wrong-dimension vector in a NON-first row refuses with
+    the same ValueError the streaming handler raises."""
+    from mfdb_hafro_etl_spark.operators.similarity import ivf_index_append
+    from mfdb_hafro_etl_spark.streaming.jobs import ivf_ingest_handler
+
+    path = _build_ivf(spark, tmp_path)
+    rows = [(i, [0.1 * (i + d) for d in range(8)]) for i in range(4)]
+    rows.append((4, None) if bad == "null" else (4, [0.5] * 5))
+    batch = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    match = "is NULL" if bad == "null" else "8-dim vectors"
+    with pytest.raises(ValueError, match=match) as batch_err:
+        ivf_index_append(batch, path, max_appended_frac=1.0)
+    handle = ivf_ingest_handler(path, str(tmp_path / "log_v"), max_appended_frac=1.0)
+    with pytest.raises(ValueError, match=match) as stream_err:
+        handle(batch, 0)
+    # one message, naming the caller
+    assert str(batch_err.value).replace("append batch", "stream batch 0") == str(
+        stream_err.value
+    )
+    assert len(_vec_rows(spark, path)) == 40
+
+
 def test_ivf_publish_retires_meta_first_and_guards_torn(spark, tmp_path):
     """ivf_index_publish writes the meta table LAST; a probe against a
     publication whose meta table is missing must fail loudly, and a
@@ -786,67 +828,77 @@ def test_ivf_publish_retires_meta_first_and_guards_torn(spark, tmp_path):
     assert ann_ivf_topk_catalog(spark, "t_ivf_torn", q, k=3).count() == 3
 
 
-def test_ivf_publish_reclaims_orphan_only_when_blocking(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["ivf", "lsh"])
+def test_ivf_publish_reclaims_orphan_only_when_blocking(spark, tmp_path, kind):
     """Regression (r9 ADVICE): publish used to rmtree
     <warehouse>/<table_name> unconditionally before every save. Now a
     stale location is reclaimed ONLY when saveAsTable actually fails
     on it (the orphan case: a managed-table directory left by an
     earlier session whose catalog is gone), and the path is derived
-    from the catalog database location. Both halves pinned here: an
-    orphan directory at the managed location is reclaimed and the
-    publish succeeds; an unrelated directory NOT at any published
-    table's location survives the publish byte-for-byte."""
-    import os
+    from the catalog database location. Both halves pinned here, for
+    both index kinds (they share sinks.index._publish): an orphan
+    directory at the managed location is reclaimed and the publish
+    succeeds; an unrelated directory NOT at any published table's
+    location survives the publish byte-for-byte."""
     from urllib.parse import urlparse
 
+    from mfdb_hafro_etl_spark.operators.dedup import (
+        dedup_against_index,
+        lsh_index_publish_bucketed,
+    )
     from mfdb_hafro_etl_spark.operators.similarity import (
         ann_ivf_topk_catalog,
         ivf_index_publish,
     )
 
-    path = _build_ivf(spark, tmp_path)
+    prefix = f"t_{kind}_orphan"
     db_loc = urlparse(
         spark.catalog.getDatabase(spark.catalog.currentDatabase()).locationUri
     ).path
     # orphan: a directory at the meta table's managed location with no
     # catalog entry behind it
-    orphan = os.path.join(db_loc, "t_ivf_orphan_meta")
+    orphan = os.path.join(db_loc, f"{prefix}_meta")
     os.makedirs(orphan, exist_ok=True)
     with open(os.path.join(orphan, "stale.txt"), "w") as fh:
         fh.write("leftover from a lost catalog")
     # bystander: same warehouse, similar name, NOT a published table
-    bystander = os.path.join(db_loc, "t_ivf_orphan_meta_backup")
+    bystander = os.path.join(db_loc, f"{prefix}_meta_backup")
     os.makedirs(bystander, exist_ok=True)
     with open(os.path.join(bystander, "precious.txt"), "w") as fh:
         fh.write("must survive")
-    ivf_index_publish(spark, path, "t_ivf_orphan")
-    q = [0.1] * 8
-    assert ann_ivf_topk_catalog(spark, "t_ivf_orphan", q, k=3).count() == 3
-    assert os.path.exists(os.path.join(bystander, "precious.txt"))
+    if kind == "ivf":
+        ivf_index_publish(spark, _build_ivf(spark, tmp_path), prefix)
+        assert ann_ivf_topk_catalog(spark, prefix, [0.1] * 8, k=3).count() == 3
+    else:
+        index = _build_index(spark, tmp_path)
+        lsh_index_publish_bucketed(spark, index, prefix, n_buckets=4)
+        got = dedup_against_index(
+            spark, index, _docs_df(spark, [(9, _CORPUS[0][1])]), "doc_id",
+            "text", catalog_prefix=prefix,
+        ).collect()
+        assert [(r.doc_id, r.dup_kind, r.match_id) for r in got] == [(9, "exact", 1)]
     with open(os.path.join(bystander, "precious.txt")) as fh:
         assert fh.read() == "must survive"
 
 
 def test_ivf_ingest_budget_from_commit_log(spark, tmp_path, monkeypatch):
     """r9 verdict #2: budget admission must be index-size-independent.
-    The handler derives appended-row counts from the commit markers
-    (n_appended tagged with the index's build_id), so admitting a
-    batch never lists or reads the standing vectors table. Pinned by
-    file-access instrumentation: a spy on DataFrameReader.parquet
-    records every read path during handler runs and the vectors root
-    must not appear. Also pins: marker-sum == table-count delta after
-    N batches, no double-count under crash-window redelivery, budget
-    reset across a rebuild (stale build_id markers stop counting),
-    and the legacy-marker fallback."""
+    The handler derives appended-row counts from the index's append
+    ledger (one {n_appended, build_id} record per batch, the same
+    record its commit marker carries), so admitting a batch never lists
+    or reads the standing vectors table. Pinned by file-access
+    instrumentation: a spy on DataFrameReader.parquet records every
+    read path during handler runs and the vectors root must not
+    appear. Also pins: ledger sum == table-count delta after N
+    batches, no double-count under crash-window redelivery, and budget
+    reset across a rebuild (stale build_id records stop counting)."""
     import json
 
     import pytest
     from pyspark.sql.readwriter import DataFrameReader
 
-    from mfdb_hafro_etl_spark.operators.similarity import (
-        _ivf_read_marker,
-        build_ivf_index,
-    )
+    from mfdb_hafro_etl_spark.operators.similarity import build_ivf_index
+    from mfdb_hafro_etl_spark.sinks.index import _IVF_META, _read_meta
     from mfdb_hafro_etl_spark.streaming.jobs import ivf_ingest_handler
 
     path = _build_ivf(spark, tmp_path)  # 40 built rows
@@ -870,14 +922,20 @@ def test_ivf_ingest_budget_from_commit_log(spark, tmp_path, monkeypatch):
         "regressed to the O(index files) per-batch scan"
     )
     # markers are the commit log: n_appended + the build they belong to
-    build_id = _ivf_read_marker(path)["build_id"]
+    build_id = _read_meta(path, _IVF_META)["build_id"]
     recs = [
         json.loads(open(os.path.join(logd, "_commits", str(i))).read())
         for i in (0, 1)
     ]
     assert [r["n_appended"] for r in recs] == [8, 8]
     assert all(r["build_id"] == build_id for r in recs)
-    # marker sum equals the true appended delta
+    # the ledger sum equals the true appended delta
+    ledger = os.path.join(path, "_appends")
+    total = 0
+    for name in os.listdir(ledger):
+        with open(os.path.join(ledger, name)) as fh:
+            total += json.load(fh)["n_appended"]
+    assert total == 16
     monkeypatch.setattr(DataFrameReader, "parquet", orig)
     assert len(_vec_rows(spark, path)) == 56  # 40 + 8 + 8
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
@@ -906,172 +964,14 @@ def test_ivf_ingest_budget_from_commit_log(spark, tmp_path, monkeypatch):
         kmeans_iters=0,
         rebuild=True,
     )
-    assert _ivf_read_marker(path)["build_id"] != build_id
+    assert _read_meta(path, _IVF_META)["build_id"] != build_id
     handle(_emb_df(spark, range(16, 24)), 2)
     assert len(_vec_rows(spark, path)) == 64  # 56 rebuilt + 8
-    # legacy fallback: a pre-r10 "ok" marker makes the sum unknowable
-    # from the log — the handler must fall back to the table-count
-    # path (reads vectors once), WARN about it (r11), and still
-    # enforce correctly
-    with open(os.path.join(logd, "_commits", "2"), "w") as fh:
-        fh.write("ok")
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    seen.clear()
-    with pytest.warns(RuntimeWarning, match="commit-log admission unavailable"):
-        handle(_emb_df(spark, range(24, 28)), 3)
-    assert vectors_root in seen  # the documented legacy cost
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-    assert len(_vec_rows(spark, path)) == 68
-
-
-def test_ivf_markers_backfill_upgrades_legacy_log(spark, tmp_path, monkeypatch):
-    """r10 verdict missing #2 / wrong #2: one unreadable marker used to
-    flip EVERY future admission to the O(index-files) table-count path,
-    silently. Pinned here: (1) the legacy path now WARNS when it
-    engages; (2) ivf_markers_backfill pays the table count exactly once
-    — rewriting unreadable markers in place (commit existence
-    preserved) and recording the residual in a synthetic build-tagged
-    marker whose sum restores marker-only admission; (3) the next
-    batch admits without reading the vectors table and without the
-    legacy warning; (4) re-running the backfill is idempotent."""
-    import json
-    import warnings as _w
-
-    import pytest
-    from pyspark.sql.readwriter import DataFrameReader
-
-    from mfdb_hafro_etl_spark.operators.similarity import _ivf_read_marker
-    from mfdb_hafro_etl_spark.streaming.jobs import (
-        ivf_ingest_handler,
-        ivf_markers_backfill,
-    )
-
-    path = _build_ivf(spark, tmp_path)  # 40 built rows
-    logd = str(tmp_path / "log_bf")
-    vectors_root = os.path.join(path, "vectors")
-    handle = ivf_ingest_handler(path, logd, max_appended_frac=0.5)  # 20
-
-    handle(_emb_df(spark, range(0, 4)), 0)
-    handle(_emb_df(spark, range(4, 8)), 1)
-    # poison: batch 0's marker becomes a pre-r10 "ok" body
-    with open(os.path.join(logd, "_commits", "0"), "w") as fh:
-        fh.write("ok")
-    # legacy admission engages loudly and pays the table scan
-    seen: list[str] = []
-    orig = DataFrameReader.parquet
-
-    def spy(self, *paths, **kw):
-        seen.extend(paths)
-        return orig(self, *paths, **kw)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    with pytest.warns(RuntimeWarning, match="commit-log admission unavailable"):
-        handle(_emb_df(spark, range(8, 12)), 2)
-    assert vectors_root in seen
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-    assert len(_vec_rows(spark, path)) == 52  # 40 + 4 + 4 + 4
-
-    # the one-shot upgrade: one table count, markers readable after
-    report = ivf_markers_backfill(spark, path, logd)
-    build_id = _ivf_read_marker(path)["build_id"]
-    assert report["build_id"] == build_id
-    assert report["n_rewritten"] == 1  # the "ok" marker
-    # batches 1 and 2 are readable (4 + 4); batch 0's rows ride the
-    # synthetic marker
-    assert report["committed_in_log"] == 8
-    assert report["backfilled_rows"] == 4
-    rec0 = json.loads(open(os.path.join(logd, "_commits", "0")).read())
-    assert rec0 == {"n_appended": 0, "build_id": build_id, "backfilled": True}
-    synth = json.loads(open(os.path.join(logd, "_commits", "backfill")).read())
-    assert synth["n_appended"] == 4 and synth["build_id"] == build_id
-    # marker sum over the current build equals the true appended delta
-    total = sum(
-        json.loads(open(os.path.join(logd, "_commits", m)).read())["n_appended"]
-        for m in os.listdir(os.path.join(logd, "_commits"))
-        if not m.endswith(".tmp")
-    )
-    assert total == len(_vec_rows(spark, path)) - 40
-
-    # marker-only admission from here: no vectors read, no warning
-    seen.clear()
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        handle(_emb_df(spark, range(12, 16)), 3)
-    assert not [
-        w for w in caught if "commit-log admission unavailable" in str(w.message)
-    ]
-    assert vectors_root not in seen
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-    assert len(_vec_rows(spark, path)) == 56
-    # budget still enforced from markers alone: 16 appended so far,
-    # 8 more would cross 0.5 * 40 = 20
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    seen.clear()
-    with pytest.raises(ValueError, match="recluster budget"):
-        handle(_emb_df(spark, range(16, 24)), 4)
-    assert vectors_root not in seen
-    monkeypatch.setattr(DataFrameReader, "parquet", orig)
-
-    # idempotent: re-running the backfill leaves the sum invariant
-    report2 = ivf_markers_backfill(spark, path, logd)
-    assert report2["n_rewritten"] == 0
-    assert report2["committed_in_log"] == 12  # batches 1-3
-    assert report2["backfilled_rows"] == 4
-    total2 = sum(
-        json.loads(open(os.path.join(logd, "_commits", m)).read())["n_appended"]
-        for m in os.listdir(os.path.join(logd, "_commits"))
-        if not m.endswith(".tmp")
-    )
-    assert total2 == 16
-
-
-def test_ivf_markers_backfill_refuses_pending_and_nondict_marker(
-    spark, tmp_path
-):
-    """r11 ADVICE low: (1) a renamed-but-uncommitted batch (sentinel
-    present, marker absent) must make the backfill REFUSE — folding
-    those rows into the synthetic marker would double-count them when
-    the batch redelivers its own marker; (2) a marker holding valid
-    non-dict JSON (e.g. `5`) is legacy like unparseable bytes and must
-    be rewritten, not raise TypeError."""
-    import json
-
-    import pytest
-
-    from mfdb_hafro_etl_spark.streaming.jobs import (
-        ivf_ingest_handler,
-        ivf_markers_backfill,
-    )
-
-    path = _build_ivf(spark, tmp_path)
-    logd = str(tmp_path / "log_bf2")
-    handle = ivf_ingest_handler(path, logd, max_appended_frac=1.0)
-    handle(_emb_df(spark, range(0, 4)), 0)
-    # poison batch 0's marker with valid non-dict JSON
-    with open(os.path.join(logd, "_commits", "0"), "w") as fh:
-        fh.write("5")
-    # a crashed batch's sentinel: backfill must refuse, untouched log
-    pending_dir = os.path.join(path, "_ingest_pending")
-    os.makedirs(pending_dir, exist_ok=True)
-    with open(os.path.join(pending_dir, "b7"), "w") as fh:
-        fh.write("{}")
-    with pytest.raises(RuntimeError, match="in-flight streaming batches"):
-        ivf_markers_backfill(spark, path, logd)
-    assert open(os.path.join(logd, "_commits", "0")).read() == "5"
-    os.remove(os.path.join(pending_dir, "b7"))
-    # sentinel gone: the non-dict marker is rewritten like any legacy one
-    report = ivf_markers_backfill(spark, path, logd)
-    assert report["n_rewritten"] == 1
-    rec0 = json.loads(open(os.path.join(logd, "_commits", "0")).read())
-    assert rec0["n_appended"] == 0 and rec0["backfilled"] is True
-    synth = json.loads(open(os.path.join(logd, "_commits", "backfill")).read())
-    assert synth["n_appended"] == 4  # batch 0's rows ride the synthetic
 
 
 def test_ivf_compact_refuses_mid_crash_window(spark, tmp_path):
     """r9 verdict #5, IVF family: the exactly-once rename discipline
-    requires an uncommitted batch's ivfb_b<id>.parquet files to
+    requires an uncommitted batch's ivfb_<token>.parquet files to
     SURVIVE until its marker exists — compaction inside that crash
     window would fold them into compacted files, and the redelivery
     would re-append the rows. The handler marks in-flight batches
@@ -1082,6 +982,7 @@ def test_ivf_compact_refuses_mid_crash_window(spark, tmp_path):
     import pytest
 
     from mfdb_hafro_etl_spark.operators.similarity import ivf_index_compact
+    from mfdb_hafro_etl_spark.sinks.index import _stream_token
     from mfdb_hafro_etl_spark.streaming.jobs import ivf_ingest_handler
 
     path = _build_ivf(spark, tmp_path)
@@ -1092,7 +993,7 @@ def test_ivf_compact_refuses_mid_crash_window(spark, tmp_path):
     assert len(committed) == 48
     # crash window: files renamed, marker lost, sentinel still present
     os.remove(os.path.join(logd, "_commits", "0"))
-    pend = os.path.join(path, "_ingest_pending", "b0")
+    pend = os.path.join(path, "_ingest_pending", _stream_token(logd, 0))
     os.makedirs(os.path.dirname(pend), exist_ok=True)
     open(pend, "w").write("b0")
     with pytest.raises(RuntimeError, match="in-flight"):
