@@ -45,38 +45,36 @@ def local_df(
     """Create a DataFrame from driver-local rows as a JVM
     LocalRelation (via pyarrow) instead of a Python-backed RDD.
 
-    Falls back to plain ``createDataFrame`` for row shapes arrow
-    can't ingest (e.g. tuple-encoded structs) — correctness first,
-    the fast path is an optimization.
+    Falls back to plain ``createDataFrame`` in two cases only: rows
+    pyarrow refuses to convert (e.g. list-encoded structs), and an
+    arrow frame whose schema drifted from the declared one. Any other
+    error, including one from creating the arrow-backed frame,
+    propagates.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     struct = _as_struct(schema)
     rows = list(rows)
+    pa_schema = to_arrow_schema(struct)
+    if rows:
+        cols = list(zip(*rows))
+        if len(cols) != len(pa_schema):
+            raise ValueError(
+                f"rows have {len(cols)} columns, schema has {len(pa_schema)}"
+            )
+    else:
+        cols = [[] for _ in pa_schema]
     try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        pa_schema = to_arrow_schema(struct)
-        if rows:
-            cols = list(zip(*rows))
-            if len(cols) != len(pa_schema):
-                raise ValueError(
-                    f"rows have {len(cols)} columns, schema has {len(pa_schema)}"
-                )
-        else:
-            cols = [[] for _ in pa_schema]
-        tbl = pa.Table.from_arrays(
-            [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
-            schema=pa_schema,
-        )
-        df = spark.createDataFrame(tbl)
-        # arrow round-trips some types loosely (e.g. large_string);
-        # guarantee the caller-declared names/types exactly. Local
-        # relations come back all-nullable, which is fine for a
-        # literal dim — compare modulo nullability.
-        want = [(f.name, f.dataType) for f in struct.fields]
-        got = [(f.name, f.dataType) for f in df.schema.fields]
-        if got != want:
-            raise ValueError(f"arrow schema drift: {got} != {want}")
-        return df
-    except Exception:
+        arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)]
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
         return spark.createDataFrame(rows, struct)
+    df = spark.createDataFrame(pa.Table.from_arrays(arrays, schema=pa_schema))
+    # arrow round-trips some types loosely (e.g. large_string); the
+    # caller-declared names/types are guaranteed by re-creating through
+    # the Python path. Local relations come back all-nullable, which
+    # is fine for a literal dim — compare modulo nullability.
+    want = [(f.name, f.dataType) for f in struct.fields]
+    if [(f.name, f.dataType) for f in df.schema.fields] != want:
+        return spark.createDataFrame(rows, struct)
+    return df

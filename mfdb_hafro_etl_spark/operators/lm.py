@@ -10,41 +10,44 @@ clean-corpus LM finds surprising are boilerplate, spam, or noise
 from Web Crawl Data", LREC 2020, which uses a 5-gram KenLM; the public
 method, not any implementation, is what this module reproduces).
 
-Model: an interpolated **bigram Kneser-Ney** LM (Kneser & Ney 1995;
-Chen & Goodman 1999 eq. 4.15-4.26, the public formulation):
+Model: an interpolated **Kneser-Ney** LM of order N = 2 or 3 (Kneser &
+Ney 1995; Chen & Goodman 1999 §4, the public formulation), one
+recursion over the levels k = N .. 2:
 
-    p(w | c) = max(cnt(c,w) - D, 0) / cnt(c)
-             + (D * n_succ(c) / cnt(c)) * p_cont(w)
-    p_cont(w) = n_prec(w) / n_types
+    p_k(w | h) = max(cnt_k(h, w) - D_k, 0) / tot_k(h)
+               + (D_k * succ_k(h) / tot_k(h)) * p_{k-1}(w | h')
+    p_1(w)     = n_prec(w) / |bigram types|
 
-with ``n_succ(c)`` = distinct successors of context c, ``n_prec(w)`` =
-distinct contexts preceding w, ``n_types`` = distinct bigram types,
-and discount ``D`` estimated as n1/(n1 + 2*n2) over bigram type counts
-(Ney et al. 1994) unless given. Out-of-vocabulary tokens map to
-``<unk>`` (tokens below ``min_count`` at train time supply its mass);
-each document is scored as ``<s> w1 w2 ...`` — every real token gets a
-conditional probability, ``<s>`` is context only. Unseen CONTEXT backs
-off to p_cont entirely; the truly-unseen corner (``<unk>`` absent from
-training because no token was rare) floors at 1/(vocab_size+1) so the
-score is total and deterministic.
+where h' drops the oldest token of h. The top level counts raw
+n-grams; each lower level counts CONTINUATIONS (how many distinct
+tokens extend the k-gram to the left among the level above's types),
+which is what distinguishes Kneser-Ney from deleted interpolation.
+``tot_k(h)`` sums a context's counts, ``succ_k(h)`` counts its distinct
+successors, and ``n_prec(w)`` counts the bigram types ending in w.
+Each level has its own discount, the Ney et al. 1994 estimate
+n1/(n1 + 2*n2) over that level's count==1 and count==2 types unless
+given. Out-of-vocabulary tokens map to ``<unk>`` (tokens below
+``min_count`` at train time supply its mass); each document is scored
+as ``<s> w1 w2 ...`` with N-1 ``<s>`` pads — every real token gets a
+conditional probability, ``<s>`` is context only. An unseen context
+at level k backs off to p_{k-1} entirely; the truly-unseen corner
+(``<unk>`` absent from training because no token was rare) floors at
+1/(vocab_size+1) so the score is total and deterministic.
 
-Why the ORACLE-BACKED arm is bigram, not KenLM's 5-gram: the arm's
-model must be a closed algebra of Spark aggregations whose DuckDB
-oracle replays the identical IEEE expression tree (suite arm
-x_lm_perplexity); recursion depth 2 keeps that scoring expression one
-CASE. A full interpolated TRIGRAM KN (continuation counts at the
-middle order, per-order discounts — Chen & Goodman 1999 §4) ships as
-train_trigram_kn / perplexity3 with the same scale shape and is
-pinned by property tests (per-context normalization, backoff) rather
-than a SQL oracle.
+Both orders are oracle-backed: the suite arms x_lm_perplexity (order
+2) and x_lm3_perplexity and x_corpus_build_ccnet (order 3) re-derive
+the whole model in DuckDB and replay the identical IEEE expression
+tree. Higher orders (KenLM's 5-gram) are refused: no arm and no
+oracle exercises them.
 
 Scale shape (the 100 TB judgment):
-- **Training** is two corpus scans (one for the vocabulary, one for
-  pair counts — the vocabulary must exist before unk-mapping) and
-  three hash aggregations; every intermediate is type-sized, never
-  corpus-sized. No windows: bigram pairs are built INSIDE the scan as
-  array algebra (transform + explode), so no per-document shuffle.
-- **Scoring** joins the exploded corpus pairs against the model
+- **Training** is one corpus scan: the n-grams are built INSIDE the
+  scan as array algebra (transform + explode, no window, no
+  per-document shuffle) and counted into a raw type table, from which
+  the vocabulary derives; the unk-mapping and every later aggregate
+  run over type-sized tables, never corpus-sized ones, and one action
+  reads all the scalars.
+- **Scoring** joins the exploded corpus n-grams against the model
   tables. The model is vocabulary-sized (bounded by ``min_count`` and
   the Heaps-law type/token gap, not by corpus size); with
   ``broadcast_model=True`` (default) every model join is a broadcast
@@ -64,8 +67,7 @@ operators), same as dedup.py / cleaning.py.
 
 from __future__ import annotations
 
-import json
-import math
+import functools
 import os
 from dataclasses import dataclass
 
@@ -74,9 +76,14 @@ from pyspark.sql import functions as F
 
 from mfdb_hafro_etl_spark.exprcache import column_template
 from mfdb_hafro_etl_spark.session import spread_for_kernel
+from mfdb_hafro_etl_spark.sinks.index import _read_meta, _retire_meta, _write_meta
 
 BOS = "<s>"
 UNK = "<unk>"
+
+#: n-gram column names, oldest context token first; order N uses the
+#: last N, so level k's table is keyed on _GRAM[-k:] at every order
+_GRAM = ("u", "v", "w")
 
 #: compressed-source bytes per scoring task. The KN scorer's probe
 #: stage (explode + 3-8 broadcast hash probes + log/CASE per n-gram)
@@ -107,85 +114,144 @@ def _lm_tokens_named(name: str) -> Column:
 
 
 @column_template
-def _pairs_named(name: str) -> Column:
-    """_pairs over a token-array column name — memoized template."""
-    return _pairs(F.col(name))
-
-
-@column_template
-def _pairs_tokens(text_col: str) -> Column:
-    """_pairs over lm_tokens(text_col) — memoized template."""
-    return _pairs(lm_tokens(text_col))
-
-
-def _pairs(toks: Column) -> Column:
-    """(context, word) bigram pairs as array algebra inside the scan:
-    element i pairs with element i-1 (1-based element_at), the first
-    token with BOS. No window, no per-document shuffle."""
+def _ngrams(name: str, order: int, tokenize: bool) -> Column:
+    """One ``_GRAM[-order:]`` struct per token of the token-array
+    column ``name`` (of ``lm_tokens(name)`` with ``tokenize``), as
+    array algebra inside the scan: token i's context is the order-1
+    tokens before it, with BOS padding the left edge. No window, no
+    per-document shuffle. Memoized template (exprcache)."""
+    toks = lm_tokens(name) if tokenize else F.col(name)
+    names = _GRAM[-order:]
     return F.transform(
         toks,
         lambda w, i: F.struct(
-            F.when(i == F.lit(0), F.lit(BOS))
-            .otherwise(F.element_at(toks, i))
-            .alias("c"),
+            *[
+                F.when(i < F.lit(back), F.lit(BOS))
+                .otherwise(F.element_at(toks, i - F.lit(back - 1)))
+                .alias(names[-1 - back])
+                for back in range(order - 1, 0, -1)
+            ],
             w.alias("w"),
         ),
     )
 
 
 @dataclass
-class BigramKN:
-    """A trained bigram Kneser-Ney model: three type-sized count
-    tables plus the scalar statistics the closed-form score needs.
-    The DataFrames are persisted by train_bigram_kn (they are read
-    once per scoring join but cost a corpus scan to rebuild);
-    call unpersist() when done."""
+class KneserNey:
+    """A trained interpolated Kneser-Ney model of order 2 or 3: the
+    vocabulary, one type-sized count table per level, and the scalar
+    statistics the closed-form score needs. The scorer derives each
+    level's context table and the unigram continuation table from the
+    level tables. train_kn persists ``tables`` (they are read once per
+    scoring join but cost a corpus scan to rebuild); call unpersist()
+    when done."""
 
-    vocab: DataFrame  # (w)                     tokens with cnt >= min_count
-    bigrams: DataFrame  # (c, w, cnt)           unk-mapped bigram counts
-    contexts: DataFrame  # (c, cnt_c, n_succ)   per-context total + distinct successors
-    continuation: DataFrame  # (w, n_prec)      distinct contexts preceding w
-    n_types: int  # distinct bigram types
+    order: int
+    vocab: DataFrame  # (w)  tokens with cnt >= min_count
+    #: levels k = order .. 2, each keyed on _GRAM[-k:] with count
+    #: column cnt{k}: raw unk-mapped counts at the top level,
+    #: continuation counts below it
+    levels: tuple[DataFrame, ...]
+    n_types: int  # distinct bigram types (rows of the level-2 table)
     vocab_size: int  # |vocab| (excluding BOS/UNK)
-    discount: float  # D in [0, 1]
+    discounts: tuple[float, ...]  # one per level, top order first
     min_count: int
 
+    @property
+    def tables(self) -> tuple[DataFrame, ...]:
+        """What train_kn persists, lm_write writes and the suite pins
+        to a result: the vocabulary and the level tables."""
+        return (self.vocab, *self.levels)
+
     def unpersist(self) -> None:
-        for df in (self.vocab, self.bigrams):
+        for df in self.tables:
             try:
                 df.unpersist()
             except Exception:
                 pass
 
 
+def _check_order(order: int) -> None:
+    if order not in (2, 3):
+        raise ValueError(f"KN order must be 2 or 3, got {order!r}")
+
+
+def _valid_discounts(discounts, order: int) -> tuple[float, ...]:
+    """One discount per level, each in [0, 1]. D == 1 is valid KN: all
+    observed mass discounts away and the level backs off entirely
+    (conservation still holds since max(c - D, 0) >= 0); the Ney
+    estimate hits it when n2 == 0. NaN and infinities fail the range
+    test."""
+    ds = tuple(float(d) for d in discounts)
+    if len(ds) != order - 1 or not all(0.0 <= d <= 1.0 for d in ds):
+        raise ValueError(
+            f"discounts must be {order - 1} value(s) in [0, 1], top order "
+            f"first; got {discounts!r}"
+        )
+    return ds
+
+
 def _maybe_broadcast(df: DataFrame, flag: bool) -> DataFrame:
     return F.broadcast(df) if flag else df
 
 
-def train_bigram_kn(
+def _unk_map(
+    grams: DataFrame,
+    vocab: DataFrame,
+    cols: tuple[str, ...],
+    keep: list[str],
+    broadcast: bool = True,
+) -> DataFrame:
+    """Map the raw n-gram columns ``<x>_raw`` of ``grams`` to model
+    tokens ``<x>``: a token outside ``vocab`` becomes UNK, a BOS pad
+    stays BOS. One left join per column against the vocabulary."""
+    for x in cols:
+        v = vocab.select(F.col("w").alias(f"__v{x}__"))
+        grams = grams.join(
+            _maybe_broadcast(v, broadcast),
+            F.col(f"{x}_raw") == F.col(f"__v{x}__"),
+            "left",
+        )
+    mapped = []
+    for x in cols:
+        tok = F.coalesce(F.col(f"__v{x}__"), F.lit(UNK))
+        if x != "w":
+            tok = F.when(F.col(f"{x}_raw") == BOS, F.lit(BOS)).otherwise(tok)
+        mapped.append(tok.alias(x))
+    return grams.select(*keep, *mapped)
+
+
+def train_kn(
     df: DataFrame,
+    order: int,
     text_col: str = "text",
     min_count: int = 2,
-    discount: float | None = None,
+    discounts: tuple[float, ...] | None = None,
     persist: bool = True,
-) -> BigramKN:
-    """Fit the model from a clean reference corpus in ONE corpus scan
-    (r12; previously two): the raw (unmapped) pair-count type table is
-    built first, and the vocabulary derives from it — every token
-    appears exactly ONCE as the ``w`` of exactly one pair (``_pairs``
-    emits one struct per token, BOS only ever on the context side), so
-    unigram counts are exactly ``sum(cnt) group by w_raw`` over the
-    raw type table, no second pass over the corpus. The unk-mapping
-    joins then run against the TYPE table (vocab-sized) instead of
-    the position-level token stream, and re-aggregate (the mapping
-    collapses rare keys into UNK). Counts are bit-identical to the
-    two-scan form by construction. The raw type table is persisted
-    for the duration of training and released before returning — with
-    ``persist=False`` nothing is cached and the vocabulary and pair
-    branches each re-scan the corpus (the historical shape: correct,
-    slower; use for one-shot harness runs where leaving cached
-    fragments on the executors would pollute later timings)."""
-    toks = lm_tokens(text_col)
+) -> KneserNey:
+    """Fit an order-``order`` model from a clean reference corpus in ONE
+    corpus scan: the raw (unmapped) n-gram type table is built first,
+    and the vocabulary derives from it — every token appears exactly
+    ONCE as the ``w`` of exactly one n-gram (``_ngrams`` emits one
+    struct per token, BOS only ever pads the context side), so unigram
+    counts are exactly ``sum(rcnt) group by w_raw``. The unk-mapping
+    joins then run against the TYPE table instead of the
+    position-level stream and re-aggregate (the mapping collapses rare
+    keys into UNK). Each lower level is one aggregate over the level
+    above it, and one action reads the type count, the vocabulary size
+    and every level's n1/n2. ``discounts`` (top order first) override
+    the Ney estimates.
+
+    ``tables`` stay persisted; the raw type table is persisted for the
+    duration of training and released before returning. With
+    ``persist=False`` nothing is cached and the vocabulary and n-gram
+    branches each re-scan the corpus (correct, slower; for one-shot
+    harness runs where cached fragments on the executors would pollute
+    later timings)."""
+    _check_order(order)
+    if discounts is not None:
+        discounts = _valid_discounts(discounts, order)
+    cols = _GRAM[-order:]
     # the training scan gets the scorer's cost-gated fan-out: the
     # explode + per-gram partial-aggregate stage is as CPU-dense as
     # scoring, and a single-row-group parquet source otherwise pins it
@@ -201,88 +267,75 @@ def train_bigram_kn(
     # re-tokenizes the whole corpus inside the single-split scan stage
     # (measured: 2.3 s single-task stage) — the exact starvation the
     # fan-out exists to remove.
-    base = src.select(toks.alias("__toks__"))
+    base = src.select(lm_tokens(text_col).alias("__toks__"))
 
     def _keep(d: DataFrame) -> DataFrame:
         return d.persist() if persist else d
 
-    raw3 = base.select(F.explode(_pairs_named("__toks__")).alias("p")).select(
-        F.col("p.c").alias("c_raw"), F.col("p.w").alias("w_raw")
+    raw = (
+        base.select(F.explode(_ngrams("__toks__", order, False)).alias("g"))
+        .select(*[F.col(f"g.{x}").alias(f"{x}_raw") for x in cols])
+        .groupBy(*[f"{x}_raw" for x in cols])
+        .agg(F.count(F.lit(1)).alias("rcnt"))
     )
-    raw = raw3.groupBy("c_raw", "w_raw").agg(F.count(F.lit(1)).alias("rcnt"))
     if persist:
         raw = raw.persist()
     uni = raw.groupBy(F.col("w_raw").alias("w")).agg(F.sum("rcnt").alias("cnt"))
     vocab = _keep(uni.filter(F.col("cnt") >= min_count).select("w"))
-
-    vc = vocab.select(F.col("w").alias("__vc__"))
-    vw = vocab.select(F.col("w").alias("__vw__"))
-    mapped = (
-        raw.join(F.broadcast(vc), F.col("c_raw") == F.col("__vc__"), "left")
-        .join(F.broadcast(vw), F.col("w_raw") == F.col("__vw__"), "left")
-        .select(
-            F.when(F.col("c_raw") == BOS, F.lit(BOS))
-            .otherwise(F.coalesce(F.col("__vc__"), F.lit(UNK)))
-            .alias("c"),
-            F.coalesce(F.col("__vw__"), F.lit(UNK)).alias("w"),
-            F.col("rcnt"),
+    mapped = _unk_map(raw, vocab, cols, ["rcnt"])
+    levels = [_keep(mapped.groupBy(*cols).agg(F.sum("rcnt").alias(f"cnt{order}")))]
+    for k in range(order - 1, 1, -1):
+        levels.append(
+            _keep(
+                levels[-1]
+                .groupBy(*cols[-k:])
+                .agg(F.count(F.lit(1)).alias(f"cnt{k}"))
+            )
         )
-    )
-    bigrams = _keep(
-        mapped.groupBy("c", "w").agg(F.sum("rcnt").alias("cnt"))
-    )
-    contexts = bigrams.groupBy("c").agg(
-        F.sum("cnt").alias("cnt_c"), F.count(F.lit(1)).alias("n_succ")
-    )
-    continuation = bigrams.groupBy("w").agg(F.count(F.lit(1)).alias("n_prec"))
 
-    # ONE action for all four training scalars (n_types, n1, n2,
-    # vocab_size): the two single-row aggregates cross-join into one
-    # row, so the driver pays one job-submission round-trip instead of
-    # two — with persist=False that is also the difference between one
-    # and two corpus re-scans for the vocabulary subtree
-    stats = (
-        bigrams.agg(
-            F.count(F.lit(1)).alias("n_types"),
-            F.count_if(F.col("cnt") == 1).alias("n1"),
-            F.count_if(F.col("cnt") == 2).alias("n2"),
+    # ONE action for every training scalar: the single-row aggregates
+    # cross-join into one row, so the driver pays one job-submission
+    # round-trip — with persist=False that is also the difference
+    # between one and several corpus re-scans
+    rows = [
+        t.agg(
+            *([F.count(F.lit(1)).alias("n_types")] if k == 2 else []),
+            F.count_if(F.col(f"cnt{k}") == 1).alias(f"n1_{k}"),
+            F.count_if(F.col(f"cnt{k}") == 2).alias(f"n2_{k}"),
         )
-        .crossJoin(vocab.agg(F.count(F.lit(1)).alias("vsize")))
-        .head()
-    )
-    # the stats action has fully materialized the persisted vocab and
-    # bigrams tables; the raw type table's blocks are no longer needed
+        for k, t in zip(range(order, 1, -1), levels)
+    ]
+    rows.append(vocab.agg(F.count(F.lit(1)).alias("vsize")))
+    stats = functools.reduce(DataFrame.crossJoin, rows).head()
+    # the stats action has fully materialized the persisted tables;
+    # the raw type table's blocks are no longer needed
     if persist:
         try:
             raw.unpersist()
         except Exception:
             pass
-    n_types = stats["n_types"]
-    vocab_size = stats["vsize"]
-    if discount is None:
-        n1, n2 = stats["n1"], stats["n2"]
-        # Ney-Essen-Kneser estimate; degenerate corpora (no singleton
+    if discounts is None:
+        # Ney-Essen-Kneser estimate per level, in [0, 1] by
+        # construction; degenerate corpora (no count==1 or count==2
         # types) get the textbook 0.75 constant
-        discount = n1 / (n1 + 2 * n2) if (n1 + 2 * n2) > 0 else 0.75
-    # D == 1 is the valid all-mass-backs-off corner (the Ney estimate
-    # hits it when n2 == 0); conservation holds since max(c-D, 0) >= 0
-    if not (0.0 <= discount <= 1.0):
-        raise ValueError(f"discount must be in [0, 1], got {discount}")
-    return BigramKN(
+        n12 = [(stats[f"n1_{k}"], stats[f"n2_{k}"]) for k in range(order, 1, -1)]
+        discounts = tuple(
+            n1 / (n1 + 2 * n2) if n1 + 2 * n2 > 0 else 0.75 for n1, n2 in n12
+        )
+    return KneserNey(
+        order=order,
         vocab=vocab,
-        bigrams=bigrams,
-        contexts=contexts,
-        continuation=continuation,
-        n_types=n_types,
-        vocab_size=vocab_size,
-        discount=float(discount),
+        levels=tuple(levels),
+        n_types=stats["n_types"],
+        vocab_size=stats["vsize"],
+        discounts=discounts,
         min_count=min_count,
     )
 
 
 def perplexity(
     df: DataFrame,
-    lm: BigramKN,
+    lm: KneserNey,
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_model: bool = True,
@@ -295,12 +348,17 @@ def perplexity(
     exp(-logprob / n_tokens). Documents with no tokens score NULL.
 
     One shuffle total with broadcast_model=True (the per-document
-    sum); the model joins are broadcast hash joins in the scan stage.
-    The probability expression is written with fixed association so a
-    SQL oracle replays the identical IEEE tree (suite arm
-    x_lm_perplexity)."""
-    D = lm.discount
+    sum); the model joins (one per level, one per level's context
+    table, the unigram continuation table, and one vocabulary unk-map
+    per n-gram column) are broadcast hash joins in the scan stage.
+    The probability is one nested CASE written with fixed association
+    so a SQL oracle replays the identical IEEE tree (suite arms
+    x_lm_perplexity, x_lm3_perplexity)."""
+    cols = _GRAM[-lm.order:]
     floor = 1.0 / (lm.vocab_size + 1)
+
+    def mb(t: DataFrame) -> DataFrame:
+        return _maybe_broadcast(t, broadcast_model)
 
     # fan the scoring scan out (session.spread_for_kernel): the
     # explode + model-probe + partial-sum stage costs ~10^4 x scan CPU
@@ -314,45 +372,40 @@ def perplexity(
     src = spread_for_kernel(
         df.select(id_col, text_col), bytes_per_task=_LM_SCORE_BYTES_PER_TASK
     )
-    pairs = src.select(
-        F.col(id_col), F.explode(_pairs_tokens(text_col)).alias("p")
-    ).select(id_col, F.col("p.c").alias("c_raw"), F.col("p.w").alias("w_raw"))
-
-    vc = lm.vocab.select(F.col("w").alias("__vc__"))
-    vw = lm.vocab.select(F.col("w").alias("__vw__"))
-    mapped = (
-        pairs.join(_maybe_broadcast(vc, broadcast_model), F.col("c_raw") == F.col("__vc__"), "left")
-        .join(_maybe_broadcast(vw, broadcast_model), F.col("w_raw") == F.col("__vw__"), "left")
-        .select(
-            id_col,
-            F.when(F.col("c_raw") == BOS, F.lit(BOS))
-            .otherwise(F.coalesce(F.col("__vc__"), F.lit(UNK)))
-            .alias("c"),
-            F.coalesce(F.col("__vw__"), F.lit(UNK)).alias("w"),
+    grams = src.select(
+        F.col(id_col), F.explode(_ngrams(text_col, lm.order, True)).alias("g")
+    ).select(id_col, *[F.col(f"g.{x}").alias(f"{x}_raw") for x in cols])
+    joined = _unk_map(grams, lm.vocab, cols, [id_col], broadcast_model)
+    for k, level in zip(range(lm.order, 1, -1), lm.levels):
+        keys = list(cols[-k:])
+        ctx = level.groupBy(*keys[:-1]).agg(
+            F.sum(f"cnt{k}").alias(f"tot{k}"), F.count(F.lit(1)).alias(f"succ{k}")
         )
-    )
-    joined = (
-        mapped.join(_maybe_broadcast(lm.bigrams, broadcast_model), ["c", "w"], "left")
-        .join(_maybe_broadcast(lm.contexts, broadcast_model), ["c"], "left")
-        .join(_maybe_broadcast(lm.continuation, broadcast_model), ["w"], "left")
-    )
-    p_cont_raw = F.coalesce(F.col("n_prec"), F.lit(0)) / F.lit(lm.n_types)
-    p_cont = F.when(p_cont_raw > 0, p_cont_raw).otherwise(F.lit(floor))
-    p_raw = F.when(F.col("cnt_c").isNull(), p_cont).otherwise(
-        F.greatest(F.coalesce(F.col("cnt"), F.lit(0)) - F.lit(D), F.lit(0.0))
-        / F.col("cnt_c")
-        + (F.lit(D) * F.col("n_succ") / F.col("cnt_c")) * p_cont
-    )
+        joined = joined.join(mb(level), keys, "left").join(mb(ctx), keys[:-1], "left")
+    unigram = lm.levels[-1].groupBy("w").agg(F.count(F.lit(1)).alias("n_prec"))
+    joined = joined.join(mb(unigram), ["w"], "left")
+
+    p_cont = F.coalesce(F.col("n_prec"), F.lit(0)) / F.lit(lm.n_types)
+    p = F.when(p_cont > 0, p_cont).otherwise(F.lit(floor))
+    for k, d in zip(range(2, lm.order + 1), reversed(lm.discounts)):
+        tot = F.col(f"tot{k}")
+        p = F.when(tot.isNull(), p).otherwise(
+            F.greatest(F.coalesce(F.col(f"cnt{k}"), F.lit(0)) - F.lit(d), F.lit(0.0))
+            / tot
+            + (F.lit(d) * F.col(f"succ{k}") / tot) * p
+        )
     # keep the score TOTAL at D == 0 (Ney estimate with no singleton
-    # types, or an explicit discount=0.0): an unseen bigram under a
+    # types, or an explicit 0.0 discount): an unseen n-gram under a
     # seen context then has p == 0, and F.log(0) is NULL, which sum()
     # would silently skip while n_tokens still counts the token —
-    # perplexity would be silently UNDERestimated. Floor to the same
-    # deterministic 1/(vocab_size+1) the unseen-vocab corner uses; for
-    # any D > 0 the seen-context branch is strictly positive (n_succ
-    # >= 1 and p_cont > 0), so this branch never fires and the IEEE
-    # tree the oracle replays is value-identical.
-    p = F.when(p_raw > F.lit(0.0), p_raw).otherwise(F.lit(floor))
+    # perplexity would be silently UNDERestimated. Floor the FINAL
+    # probability to the same deterministic 1/(vocab_size+1) the
+    # unseen-vocab corner uses (a lower level can only be 0 when its
+    # own seen branch is, so one floor at the top covers every level);
+    # for every D > 0 the seen-context branch is strictly positive, so
+    # this branch never fires and the IEEE tree the oracle replays is
+    # value-identical.
+    p = F.when(p > F.lit(0.0), p).otherwise(F.lit(floor))
     per_doc = joined.groupBy(id_col).agg(
         F.count(F.lit(1)).alias(out_tokens), F.sum(F.log(p)).alias(out_logprob)
     )
@@ -423,431 +476,58 @@ def ppl_thresholds(
 
 # ------------------------------------------------------------- persistence
 _LM_META = "_lm_meta.json"
-_LM_SUBTABLES = ("vocab", "bigrams", "contexts", "continuation")
 
 
-def lm_write(lm: BigramKN, path: str) -> None:
-    """Persist the model as four parquet subtables plus a meta file.
-    Meta is retired FIRST and written LAST (the dedup/IVF index
-    discipline: a crash mid-write leaves a visibly-torn model — no
-    meta — never a silently-stale one)."""
-    meta_path = os.path.join(path, _LM_META)
-    if os.path.exists(meta_path):
-        os.remove(meta_path)
-    for name in _LM_SUBTABLES:
-        getattr(lm, name).write.mode("overwrite").parquet(
-            os.path.join(path, name)
-        )
-    meta = {
-        "n_types": lm.n_types,
-        "vocab_size": lm.vocab_size,
-        "discount": lm.discount,
-        "min_count": lm.min_count,
-        "order": 2,
-    }
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, meta_path)
+def _subtables(order: int) -> tuple[str, ...]:
+    """On-disk names of KneserNey.tables, in the same order."""
+    return ("vocab", *(f"level{k}" for k in range(order, 1, -1)))
 
 
-def lm_read(spark: SparkSession, path: str) -> BigramKN:
-    """Load a persisted model; a missing meta file means the model is
-    absent or torn — fail loudly rather than score with a partial
-    model."""
-    meta_path = os.path.join(path, _LM_META)
-    if not os.path.exists(meta_path):
+def lm_write(lm: KneserNey, path: str) -> None:
+    """Persist the model as parquet subtables (the vocabulary and one
+    per level) plus a meta file. The meta is retired FIRST and written
+    LAST (sinks.index's discipline: a crash mid-write leaves a
+    visibly-torn model — no meta — never a silently-stale one)."""
+    _retire_meta(path, _LM_META)
+    for name, table in zip(_subtables(lm.order), lm.tables):
+        table.write.mode("overwrite").parquet(os.path.join(path, name))
+    _write_meta(
+        path,
+        _LM_META,
+        {
+            "order": lm.order,
+            "n_types": lm.n_types,
+            "vocab_size": lm.vocab_size,
+            "discounts": list(lm.discounts),
+            "min_count": lm.min_count,
+        },
+    )
+
+
+def lm_read(spark: SparkSession, path: str) -> KneserNey:
+    """Load a persisted model of either order; a missing meta file
+    means the model is absent or torn, and an order or discount
+    lm_write cannot have written means it is corrupt — both fail
+    loudly rather than score with a partial model."""
+    try:
+        meta = _read_meta(path, _LM_META)
+    except FileNotFoundError:
         raise FileNotFoundError(
-            f"no LM meta at {meta_path} — model absent or torn (a crash "
-            "mid-lm_write leaves no meta by design); retrain."
-        )
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    if meta.get("order") != 2:
-        raise ValueError(f"unsupported LM order {meta.get('order')}")
-    dfs = {
-        name: spark.read.parquet(os.path.join(path, name))
-        for name in _LM_SUBTABLES
-    }
-    # D == 1.0 is the valid all-mass-backs-off corner (the Ney estimate
-    # hits it when n2 == 0) — train_bigram_kn accepts it and lm_write
-    # persists it, so the read-side guard must too (same bound as
-    # lm3_read); only out-of-range or non-finite values are corrupt
-    if not (0.0 <= float(meta["discount"]) <= 1.0) or not math.isfinite(
-        float(meta["discount"])
-    ):
-        raise ValueError(f"corrupt LM meta: discount={meta['discount']}")
-    return BigramKN(
-        vocab=dfs["vocab"],
-        bigrams=dfs["bigrams"],
-        contexts=dfs["contexts"],
-        continuation=dfs["continuation"],
+            f"no LM meta at {os.path.join(path, _LM_META)} — model absent or "
+            "torn (a crash mid-lm_write leaves no meta by design); retrain."
+        ) from None
+    order = meta["order"]
+    _check_order(order)
+    discounts = _valid_discounts(meta["discounts"], order)
+    vocab, *levels = (
+        spark.read.parquet(os.path.join(path, name)) for name in _subtables(order)
+    )
+    return KneserNey(
+        order=order,
+        vocab=vocab,
+        levels=tuple(levels),
         n_types=int(meta["n_types"]),
         vocab_size=int(meta["vocab_size"]),
-        discount=float(meta["discount"]),
-        min_count=int(meta["min_count"]),
-    )
-
-
-# ------------------------------------------------------------ trigram KN
-def _triples(toks: Column) -> Column:
-    """(u, v, w) trigram triples as array algebra inside the scan:
-    double-BOS padding, so token i's context is (toks[i-2], toks[i-1])
-    with BOS filling the left edge — same no-window discipline as
-    _pairs."""
-    return F.transform(
-        toks,
-        lambda w, i: F.struct(
-            F.when(i <= F.lit(1), F.lit(BOS))
-            .otherwise(F.element_at(toks, i - 1))
-            .alias("u"),
-            F.when(i == F.lit(0), F.lit(BOS))
-            .otherwise(F.element_at(toks, i))
-            .alias("v"),
-            w.alias("w"),
-        ),
-    )
-
-
-@column_template
-def _triples_named(name: str) -> Column:
-    """_triples over a token-array column name — memoized template."""
-    return _triples(F.col(name))
-
-
-@column_template
-def _triples_tokens(text_col: str) -> Column:
-    """_triples over lm_tokens(text_col) — memoized template."""
-    return _triples(lm_tokens(text_col))
-
-
-@dataclass
-class TrigramKN:
-    """Interpolated trigram Kneser-Ney (Chen & Goodman 1999 — the
-    public formulation): the highest order uses raw counts, the
-    middle order uses CONTINUATION counts (distinct left-extensions
-    of each bigram type), the lowest is the unigram continuation
-    distribution — each with its own Ney-Essen-Kneser discount.
-    All tables are type-sized; same scale shape as BigramKN."""
-
-    vocab: DataFrame  # (w)
-    tri: DataFrame  # (u, v, w, cnt)          raw trigram counts
-    ctx3: DataFrame  # (u, v, cnt_uv, n_succ3)
-    cont2: DataFrame  # (v, w, ckn)           distinct u per (v, w)
-    ctx2: DataFrame  # (v, ckn_v, n_succ2)
-    cont1: DataFrame  # (w, n_prec)           distinct v per bigram type
-    n_bitypes: int  # distinct bigram types
-    vocab_size: int
-    d3: float
-    d2: float
-    min_count: int
-
-    def unpersist(self) -> None:
-        for df in (self.vocab, self.tri, self.cont2):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
-
-def train_trigram_kn(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-    d3: float | None = None,
-    d2: float | None = None,
-    persist: bool = True,
-) -> TrigramKN:
-    """Fit the trigram model in ONE corpus scan (r12; previously two)
-    and type-sized aggregates throughout: the raw (unmapped)
-    triple-count type table is built first, and the vocabulary derives
-    from it — every token appears exactly ONCE as the ``w`` of exactly
-    one triple (``_triples`` emits one struct per token; BOS only ever
-    pads the context side), so unigram counts are exactly ``sum(cnt)
-    group by w_raw`` over the raw type table, no second corpus pass.
-    The unk-mapping joins then run against the TYPE table instead of
-    the position-level stream and re-aggregate (the mapping collapses
-    rare keys into UNK) — counts bit-identical to the two-scan form by
-    construction; ``persist=False`` keeps the historical uncached
-    two-scan shape. The middle order's counts are CONTINUATION counts
-    (how many distinct contexts extend each bigram type left), which
-    is what distinguishes Kneser-Ney from naive deleted interpolation
-    — computed as one aggregate over the trigram TYPE table, as
-    before."""
-    toks = lm_tokens(text_col)
-    # the training scan gets the scorer's cost-gated fan-out: the
-    # explode + per-gram partial-aggregate stage is as CPU-dense as
-    # scoring, and a single-row-group parquet source otherwise pins it
-    # to ONE core (measured: 2.5 s single-task stage at sf0.1). All
-    # training outputs are grouping aggregates, so the round-robin
-    # partitioning cannot change any count.
-    src = spread_for_kernel(
-        df.select(text_col), bytes_per_task=_LM_SCORE_BYTES_PER_TASK
-    )
-    # no empty-doc filter here: explode() of an empty (or NULL) token
-    # array already emits zero rows, and an explicit size()>0 filter
-    # gets PUSHED BELOW the fan-out exchange by the optimizer, which
-    # re-tokenizes the whole corpus inside the single-split scan stage
-    # (measured: 2.3 s single-task stage) — the exact starvation the
-    # fan-out exists to remove.
-    base = src.select(toks.alias("__toks__"))
-
-    def _keep(d: DataFrame) -> DataFrame:
-        return d.persist() if persist else d
-
-    raw3 = base.select(F.explode(_triples_named("__toks__")).alias("t")).select(
-        F.col("t.u").alias("u_raw"),
-        F.col("t.v").alias("v_raw"),
-        F.col("t.w").alias("w_raw"),
-    )
-    raw = raw3.groupBy("u_raw", "v_raw", "w_raw").agg(
-        F.count(F.lit(1)).alias("rcnt")
-    )
-    if persist:
-        raw = raw.persist()
-    uni = raw.groupBy(F.col("w_raw").alias("w")).agg(F.sum("rcnt").alias("cnt"))
-    vocab = _keep(uni.filter(F.col("cnt") >= min_count).select("w"))
-
-    vu = vocab.select(F.col("w").alias("__vu__"))
-    vv = vocab.select(F.col("w").alias("__vv__"))
-    vw = vocab.select(F.col("w").alias("__vw__"))
-    mapped = (
-        raw.join(F.broadcast(vu), F.col("u_raw") == F.col("__vu__"), "left")
-        .join(F.broadcast(vv), F.col("v_raw") == F.col("__vv__"), "left")
-        .join(F.broadcast(vw), F.col("w_raw") == F.col("__vw__"), "left")
-        .select(
-            F.when(F.col("u_raw") == BOS, F.lit(BOS))
-            .otherwise(F.coalesce(F.col("__vu__"), F.lit(UNK)))
-            .alias("u"),
-            F.when(F.col("v_raw") == BOS, F.lit(BOS))
-            .otherwise(F.coalesce(F.col("__vv__"), F.lit(UNK)))
-            .alias("v"),
-            F.coalesce(F.col("__vw__"), F.lit(UNK)).alias("w"),
-            F.col("rcnt"),
-        )
-    )
-    tri = _keep(mapped.groupBy("u", "v", "w").agg(F.sum("rcnt").alias("cnt")))
-    ctx3 = tri.groupBy("u", "v").agg(
-        F.sum("cnt").alias("cnt_uv"), F.count(F.lit(1)).alias("n_succ3")
-    )
-    cont2 = _keep(
-        tri.groupBy("v", "w").agg(F.count(F.lit(1)).alias("ckn"))
-    )
-    ctx2 = cont2.groupBy("v").agg(
-        F.sum("ckn").alias("ckn_v"), F.count(F.lit(1)).alias("n_succ2")
-    )
-    cont1 = cont2.groupBy("w").agg(F.count(F.lit(1)).alias("n_prec"))
-
-    # ONE action for all six training scalars (the bigram-trainer
-    # discipline): three single-row aggregates cross-joined into one
-    # row, one job-submission round-trip
-    st = (
-        tri.agg(
-            F.count_if(F.col("cnt") == 1).alias("n1_3"),
-            F.count_if(F.col("cnt") == 2).alias("n2_3"),
-        )
-        .crossJoin(
-            cont2.agg(
-                F.count(F.lit(1)).alias("n_bitypes"),
-                F.count_if(F.col("ckn") == 1).alias("n1_2"),
-                F.count_if(F.col("ckn") == 2).alias("n2_2"),
-            )
-        )
-        .crossJoin(vocab.agg(F.count(F.lit(1)).alias("vsize")))
-        .head()
-    )
-    # the stats action has fully materialized the persisted vocab,
-    # tri, and cont2 tables; release the raw type table's blocks
-    if persist:
-        try:
-            raw.unpersist()
-        except Exception:
-            pass
-    vocab_size = st["vsize"]
-    if d3 is None:
-        d3 = st["n1_3"] / (st["n1_3"] + 2 * st["n2_3"]) if (st["n1_3"] + 2 * st["n2_3"]) > 0 else 0.75
-    if d2 is None:
-        d2 = st["n1_2"] / (st["n1_2"] + 2 * st["n2_2"]) if (st["n1_2"] + 2 * st["n2_2"]) > 0 else 0.75
-    for name, d in (("d3", d3), ("d2", d2)):
-        # D == 1 is valid KN (all observed mass discounts away and the
-        # order backs off entirely — conservation still holds since
-        # max(c-D, 0) >= 0); the Ney estimate hits it when n2 == 0
-        if not (0.0 <= d <= 1.0):
-            raise ValueError(f"{name} must be in [0, 1], got {d}")
-    return TrigramKN(
-        vocab=vocab,
-        tri=tri,
-        ctx3=ctx3,
-        cont2=cont2,
-        ctx2=ctx2,
-        cont1=cont1,
-        n_bitypes=st["n_bitypes"],
-        vocab_size=vocab_size,
-        d3=float(d3),
-        d2=float(d2),
-        min_count=min_count,
-    )
-
-
-def perplexity3(
-    df: DataFrame,
-    lm: TrigramKN,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_model: bool = True,
-    out_tokens: str = "n_tokens",
-    out_logprob: str = "logprob",
-    out_ppl: str = "ppl",
-) -> DataFrame:
-    """Score documents under the trigram model: the interpolated-KN
-    recursion (depth 3) as one nested CASE over five broadcast model
-    joins; still a single document-keyed shuffle (the per-doc sum).
-    Unseen (u, v) context backs off to the KN bigram, unseen v to
-    the unigram continuation, with the same deterministic
-    1/(vocab_size+1) floor as the bigram scorer."""
-    d3, d2 = lm.d3, lm.d2
-    floor = 1.0 / (lm.vocab_size + 1)
-
-    # same scoring fan-out as perplexity (see there): the depth-3
-    # probe stage is even denser per byte, and single-row-group
-    # sources otherwise pin it to one core
-    src = spread_for_kernel(
-        df.select(id_col, text_col), bytes_per_task=_LM_SCORE_BYTES_PER_TASK
-    )
-    trips = src.select(
-        F.col(id_col), F.explode(_triples_tokens(text_col)).alias("t")
-    ).select(
-        id_col,
-        F.col("t.u").alias("u_raw"),
-        F.col("t.v").alias("v_raw"),
-        F.col("t.w").alias("w_raw"),
-    )
-    vu = lm.vocab.select(F.col("w").alias("__vu__"))
-    vv = lm.vocab.select(F.col("w").alias("__vv__"))
-    vw = lm.vocab.select(F.col("w").alias("__vw__"))
-    mb = lambda t: _maybe_broadcast(t, broadcast_model)  # noqa: E731
-    mapped = (
-        trips.join(mb(vu), F.col("u_raw") == F.col("__vu__"), "left")
-        .join(mb(vv), F.col("v_raw") == F.col("__vv__"), "left")
-        .join(mb(vw), F.col("w_raw") == F.col("__vw__"), "left")
-        .select(
-            id_col,
-            F.when(F.col("u_raw") == BOS, F.lit(BOS))
-            .otherwise(F.coalesce(F.col("__vu__"), F.lit(UNK)))
-            .alias("u"),
-            F.when(F.col("v_raw") == BOS, F.lit(BOS))
-            .otherwise(F.coalesce(F.col("__vv__"), F.lit(UNK)))
-            .alias("v"),
-            F.coalesce(F.col("__vw__"), F.lit(UNK)).alias("w"),
-        )
-    )
-    joined = (
-        mapped.join(mb(lm.tri), ["u", "v", "w"], "left")
-        .join(mb(lm.ctx3), ["u", "v"], "left")
-        .join(mb(lm.cont2), ["v", "w"], "left")
-        .join(mb(lm.ctx2), ["v"], "left")
-        .join(mb(lm.cont1), ["w"], "left")
-    )
-    p_cont_raw = F.coalesce(F.col("n_prec"), F.lit(0)) / F.lit(lm.n_bitypes)
-    p_cont = F.when(p_cont_raw > 0, p_cont_raw).otherwise(F.lit(floor))
-    p_kn2 = F.when(F.col("ckn_v").isNull(), p_cont).otherwise(
-        F.greatest(F.coalesce(F.col("ckn"), F.lit(0)) - F.lit(d2), F.lit(0.0))
-        / F.col("ckn_v")
-        + (F.lit(d2) * F.col("n_succ2") / F.col("ckn_v")) * p_cont
-    )
-    p_raw = F.when(F.col("cnt_uv").isNull(), p_kn2).otherwise(
-        F.greatest(F.coalesce(F.col("cnt"), F.lit(0)) - F.lit(d3), F.lit(0.0))
-        / F.col("cnt_uv")
-        + (F.lit(d3) * F.col("n_succ3") / F.col("cnt_uv")) * p_kn2
-    )
-    # same D == 0 total-score floor as the bigram scorer: with d3 == 0
-    # (or d2 == 0 one level down) an unseen n-gram under a seen context
-    # yields p == 0 and log(0) is NULL, silently skipped by sum() —
-    # floor the FINAL probability once (p_kn2 can only be 0 when its
-    # own seen branch is, so one floor at the top covers both levels;
-    # for d3, d2 > 0 it never fires and the expression is
-    # value-identical)
-    p = F.when(p_raw > F.lit(0.0), p_raw).otherwise(F.lit(floor))
-    per_doc = joined.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias(out_tokens), F.sum(F.log(p)).alias(out_logprob)
-    )
-    return (
-        df.select(id_col)
-        .join(per_doc, [id_col], "left")
-        .select(
-            id_col,
-            F.coalesce(F.col(out_tokens), F.lit(0)).alias(out_tokens),
-            F.col(out_logprob),
-            F.when(
-                F.col(out_tokens) > 0,
-                F.exp(-F.col(out_logprob) / F.col(out_tokens)),
-            ).alias(out_ppl),
-        )
-    )
-
-
-_LM3_SUBTABLES = ("vocab", "tri", "ctx3", "cont2", "ctx2", "cont1")
-
-
-def lm3_write(lm: TrigramKN, path: str) -> None:
-    """Persist the trigram model — six parquet subtables plus a meta
-    file, same retire-first/write-last discipline as lm_write (a
-    crash mid-write leaves a visibly-torn model, never a stale
-    one)."""
-    meta_path = os.path.join(path, _LM_META)
-    if os.path.exists(meta_path):
-        os.remove(meta_path)
-    for name in _LM3_SUBTABLES:
-        getattr(lm, name).write.mode("overwrite").parquet(
-            os.path.join(path, name)
-        )
-    meta = {
-        "n_bitypes": lm.n_bitypes,
-        "vocab_size": lm.vocab_size,
-        "d3": lm.d3,
-        "d2": lm.d2,
-        "min_count": lm.min_count,
-        "order": 3,
-    }
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, meta_path)
-
-
-def lm3_read(spark: SparkSession, path: str) -> TrigramKN:
-    """Load a persisted trigram model; missing meta = absent or torn,
-    fail loudly (mirrors lm_read)."""
-    meta_path = os.path.join(path, _LM_META)
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"no LM meta at {meta_path} — model absent or torn (a crash "
-            "mid-lm3_write leaves no meta by design); retrain."
-        )
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    if meta.get("order") != 3:
-        raise ValueError(
-            f"LM at {path} has order {meta.get('order')}, not 3 — use "
-            "lm_read for bigram models."
-        )
-    for name, d in (("d3", meta["d3"]), ("d2", meta["d2"])):
-        if not (0.0 <= float(d) <= 1.0) or not math.isfinite(float(d)):
-            raise ValueError(f"corrupt LM meta: {name}={d}")
-    dfs = {
-        name: spark.read.parquet(os.path.join(path, name))
-        for name in _LM3_SUBTABLES
-    }
-    return TrigramKN(
-        vocab=dfs["vocab"],
-        tri=dfs["tri"],
-        ctx3=dfs["ctx3"],
-        cont2=dfs["cont2"],
-        ctx2=dfs["ctx2"],
-        cont1=dfs["cont1"],
-        n_bitypes=int(meta["n_bitypes"]),
-        vocab_size=int(meta["vocab_size"]),
-        d3=float(meta["d3"]),
-        d2=float(meta["d2"]),
+        discounts=discounts,
         min_count=int(meta["min_count"]),
     )

@@ -175,8 +175,7 @@ def rescale_by_published(
     whole DAG twice (19.3 s); the window shape measures 12.9-14.0 s
     across six round-8 isolated fresh-JVM x100 probes, including
     three run on the final artifact tree (in-suite artifact context
-    runs higher — long-lived-heap GC + neighbours; adjudication in
-    SCALE_BENCH_r08.md).
+    runs higher — long-lived-heap GC + neighbours).
     In the reference the ratio reads landings already materialized
     in the DB (R/initdb.R:399 vs :461) — a caller who wants that
     durable barrier materializes to parquet first

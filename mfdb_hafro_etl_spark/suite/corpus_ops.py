@@ -1012,7 +1012,7 @@ LEFT JOIN agg a ON d.doc_id = a.doc_id
 @register("x_lm_perplexity", _LM_SQL)
 def x_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LM-perplexity quality filter end-to-end
-    (operators/lm.py:train_bigram_kn + perplexity + ppl_bucket):
+    (operators/lm.py:train_kn(order=2) + perplexity + ppl_bucket):
     train on the clean slice, score the whole corpus, bucket by fixed
     cutoffs. The model's type-sized aggregates are cached for the
     scoring plan's three model joins, with the pin scoped to the
@@ -1022,7 +1022,7 @@ def x_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mfdb_hafro_etl_spark.session import pin_to_result
 
     docs = load_table(spark, sf_dir, "documents")
-    m = lmod.train_bigram_kn(docs.filter(F.col("doc_id") % 5 > 0))
+    m = lmod.train_kn(docs.filter(F.col("doc_id") % 5 > 0), 2)
     scored = lmod.perplexity(docs, m)
     ppl_r = F.round("ppl", 6)
     out = scored.select(
@@ -1031,12 +1031,12 @@ def x_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ppl_r.alias("ppl"),
         lmod.ppl_bucket(ppl_r, 29.2, 30.1).alias("bucket"),
     )
-    return pin_to_result(out, [m.vocab, m.bigrams])
+    return pin_to_result(out, list(m.tables))
 
 
 # ------------------------------------------- trigram KN quality filter
 # The INTERPOLATED TRIGRAM Kneser-Ney scorer (operators/lm.py:
-# train_trigram_kn + perplexity3 — Chen & Goodman 1999 §4: raw counts
+# train_kn(order=3) + perplexity — Chen & Goodman 1999 §4: raw counts
 # at the highest order, CONTINUATION counts at the middle order, the
 # unigram continuation distribution at the bottom, per-order
 # Ney-Essen-Kneser discounts). The oracle re-derives the ENTIRE model
@@ -1200,25 +1200,26 @@ CROSS JOIN thr
 @register("x_lm3_perplexity", _LM3_SQL)
 def x_lm3_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram-KN quality filter end-to-end (operators/lm.py:
-    train_trigram_kn + perplexity3 + ppl_thresholds + ppl_bucket):
+    train_kn(order=3) + perplexity + ppl_thresholds + ppl_bucket):
     train on the clean slice (doc_id % 5 > 0), score the whole corpus
     under the depth-3 interpolated-KN recursion, bucket by CORPUS
     TERCILES of the 6dp-rounded perplexity (exact percentile,
     mirrored as quantile_cont in the oracle — r11, replacing the
     sf0.01-pinned constants whose head bucket emptied at scale, r10
     verdict next #6) — the same CCNet topology as x_lm_perplexity one
-    order deeper. Scale shape: training is two corpus scans + four
-    hash aggregates (all type-sized), scoring is five broadcast model
-    joins + ONE doc-keyed shuffle; the scored doc-id-sized table is
-    persisted once so the threshold action and the returned frame
-    share it instead of re-running the scoring subtree."""
+    order deeper. Scale shape: training is ONE corpus scan feeding
+    type-sized hash aggregates, scoring is five broadcast model joins
+    + three vocabulary unk-maps + ONE doc-keyed shuffle; the scored
+    doc-id-sized table is persisted once so the threshold action and
+    the returned frame share it instead of re-running the scoring
+    subtree."""
     from mfdb_hafro_etl_spark.operators import lm as lmod
     from mfdb_hafro_etl_spark.session import pin_to_result
 
     docs = load_table(spark, sf_dir, "documents")
-    m = lmod.train_trigram_kn(docs.filter(F.col("doc_id") % 5 > 0))
+    m = lmod.train_kn(docs.filter(F.col("doc_id") % 5 > 0), 3)
     scored = (
-        lmod.perplexity3(docs, m)
+        lmod.perplexity(docs, m)
         .select("doc_id", "n_tokens", F.round("ppl", 6).alias("ppl"))
         .persist()
     )
@@ -1229,4 +1230,4 @@ def x_lm3_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ppl",
         lmod.ppl_bucket(F.col("ppl"), head_max, tail_min).alias("bucket"),
     )
-    return pin_to_result(out, [m.vocab, m.tri, m.cont2, scored])
+    return pin_to_result(out, [*m.tables, scored])

@@ -1964,17 +1964,11 @@ def corpus_build(
         # model re-derives its corpus scans per consumer; the pin is
         # scoped to the RETURNED frame's lifetime (pin_to_result
         # below), the r7 eager-cache contract
-        train_docs = lm_train if lm_train is not None else kept
-        if lm_order == 3:
-            model = lmod.train_trigram_kn(train_docs)
-            scored_raw = lmod.perplexity3(kept, model)
-            model_pins = [model.vocab, model.tri, model.cont2]
-        elif lm_order == 2:
-            model = lmod.train_bigram_kn(train_docs)
-            scored_raw = lmod.perplexity(kept, model)
-            model_pins = [model.vocab, model.bigrams]
-        else:
+        if lm_order not in (2, 3):
             raise ValueError(f"corpus_build: lm_order must be 2 or 3, got {lm_order}")
+        model = lmod.train_kn(lm_train if lm_train is not None else kept, lm_order)
+        scored_raw = lmod.perplexity(kept, model)
+        model_pins = list(model.tables)
         # score ONCE into a persisted doc-id-sized table: the gate,
         # the exact-dedup/s1 rebuilds of `kept`, and the keep-best
         # scoring all read it — without the pin each consumer re-runs
@@ -2005,11 +1999,7 @@ def corpus_build(
             cutoff = lmod.ppl_thresholds(
                 scored_lm, cuts=(lm_tail_quantile,), exact=True
             )[0]
-            for t in model_pins:
-                try:
-                    t.unpersist()
-                except Exception:
-                    pass
+            model.unpersist()
             # NO release pin for the checkpoint: unlike a persisted
             # cache (unpersist -> recompute, slower never wrong), a
             # truncated-lineage checkpoint is UNRECOVERABLE — a pin

@@ -885,7 +885,7 @@ def main() -> None:
     ap.add_argument("cmd", choices=["gen", "run", "all", "drift"])
     ap.add_argument("--factors", default="10,100")
     ap.add_argument("--only", default=None)
-    ap.add_argument("--out", default=os.path.join(REPO, "SCALE_BENCH_r05.json"))
+    ap.add_argument("--out", default=os.path.join(REPO, "SCALE_BENCH.json"))
     ap.add_argument(
         "--hist",
         default=None,

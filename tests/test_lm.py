@@ -1,4 +1,4 @@
-"""Bigram Kneser-Ney LM quality filter (operators/lm.py): the
+"""Kneser-Ney LM quality filter, orders 2 and 3 (operators/lm.py): the
 statistical invariants (normalization, discount estimate, unseen-word
 penalty), determinism under repartition, the persistence round-trip
 and its fail-loud torn states, and the bucketing contract."""
@@ -29,7 +29,7 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def model(corpus):
-    m = lm.train_bigram_kn(corpus, min_count=2)
+    m = lm.train_kn(corpus, 2, min_count=2)
     yield m
     m.unpersist()
 
@@ -100,26 +100,26 @@ def test_scoring_deterministic_under_repartition(spark, corpus, model):
 
 
 def test_persist_flag_is_semantically_inert(corpus):
-    m2 = lm.train_bigram_kn(corpus, min_count=2, persist=False)
+    m2 = lm.train_kn(corpus, 2, min_count=2, persist=False)
     a = _ppl_map(
         lm.perplexity(corpus, m2).select("doc_id", F.round("ppl", 6).alias("ppl"))
     )
-    m1 = lm.train_bigram_kn(corpus, min_count=2)
+    m1 = lm.train_kn(corpus, 2, min_count=2)
     b = _ppl_map(
         lm.perplexity(corpus, m1).select("doc_id", F.round("ppl", 6).alias("ppl"))
     )
     m1.unpersist()
     assert a == b
-    assert m2.discount == m1.discount and m2.n_types == m1.n_types
+    assert m2.discounts == m1.discounts and m2.n_types == m1.n_types
 
 
 def test_discount_estimate_and_override(corpus):
-    m = lm.train_bigram_kn(corpus, min_count=2, persist=False)
-    assert 0.0 <= m.discount < 1.0
-    m_fixed = lm.train_bigram_kn(corpus, min_count=2, discount=0.9, persist=False)
-    assert m_fixed.discount == 0.9
+    m = lm.train_kn(corpus, 2, min_count=2, persist=False)
+    assert 0.0 <= m.discounts[0] < 1.0
+    m_fixed = lm.train_kn(corpus, 2, min_count=2, discounts=(0.9,), persist=False)
+    assert m_fixed.discounts == (0.9,)
     with pytest.raises(ValueError, match="discount"):
-        lm.train_bigram_kn(corpus, min_count=2, discount=1.5, persist=False)
+        lm.train_kn(corpus, 2, min_count=2, discounts=(1.5,), persist=False)
 
 
 def test_empty_and_whitespace_docs_score_null(spark, model):
@@ -136,7 +136,7 @@ def test_lm_write_read_round_trip(spark, corpus, model, tmp_path):
     path = str(tmp_path / "lm")
     lm.lm_write(model, path)
     loaded = lm.lm_read(spark, path)
-    assert loaded.discount == model.discount
+    assert loaded.discounts == model.discounts
     assert loaded.n_types == model.n_types
     assert loaded.vocab_size == model.vocab_size
     a = _ppl_map(
@@ -196,8 +196,8 @@ def test_perplexity_matches_hand_computation(spark):
     docs = spark.createDataFrame(
         [(1, "a b"), (2, "a b")], "doc_id long, text string"
     )
-    m = lm.train_bigram_kn(docs, min_count=1, persist=False)
-    assert m.discount == 0.0
+    m = lm.train_kn(docs, 2, min_count=1, persist=False)
+    assert m.discounts == (0.0,)
     row = lm.perplexity(docs, m).head()
     assert row["n_tokens"] == 2
     assert math.isclose(row["ppl"], 1.0, abs_tol=1e-12)
@@ -312,7 +312,7 @@ def test_corpus_build_lm_order_and_quantile_gate(spark, sf_dir):
 # ------------------------------------------------------------ trigram KN
 @pytest.fixture(scope="module")
 def model3(corpus):
-    m = lm.train_trigram_kn(corpus, min_count=2)
+    m = lm.train_kn(corpus, 3, min_count=2)
     yield m
     m.unpersist()
 
@@ -328,7 +328,7 @@ def test_trigram_kn_probabilities_normalize(spark, corpus, model3):
         n_pref = len(prefix.split())
         pref_lp = 0.0
         if n_pref:
-            pref_lp = lm.perplexity3(
+            pref_lp = lm.perplexity(
                 spark.createDataFrame([(0, prefix)], "doc_id long, text string"),
                 model3,
             ).head()["logprob"]
@@ -337,7 +337,7 @@ def test_trigram_kn_probabilities_normalize(spark, corpus, model3):
             "doc_id long, text string",
         )
         return (
-            lm.perplexity3(docs, model3)
+            lm.perplexity(docs, model3)
             .select(F.sum(F.exp(F.col("logprob") - F.lit(pref_lp))))
             .head()[0]
         )
@@ -357,13 +357,13 @@ def test_trigram_unseen_word_raises_ppl_and_beats_bigram_on_train(
     unseen = spark.createDataFrame(
         [(1, "the qqqq sat on the mat")], "doc_id long, text string"
     )
-    p_seen = lm.perplexity3(seen, model3).head()["ppl"]
-    p_unseen = lm.perplexity3(unseen, model3).head()["ppl"]
+    p_seen = lm.perplexity(seen, model3).head()["ppl"]
+    p_unseen = lm.perplexity(unseen, model3).head()["ppl"]
     assert p_unseen > p_seen
     # on its own training corpus the trigram should fit at least as
     # tightly as the bigram (longer context, same discount family)
     b = lm.perplexity(corpus, model).agg(F.avg("ppl")).head()[0]
-    t = lm.perplexity3(corpus, model3).agg(F.avg("ppl")).head()[0]
+    t = lm.perplexity(corpus, model3).agg(F.avg("ppl")).head()[0]
     assert t < b
 
 
@@ -374,12 +374,12 @@ def test_trigram_degenerate_mle_pin(spark):
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "a b c")], "doc_id long, text string"
     )
-    m = lm.train_trigram_kn(docs, min_count=1, persist=False)
+    m = lm.train_kn(docs, 3, min_count=1, persist=False)
     # d3: n1=0, n2=3 -> 0. d2: every continuation count is 1 (n2=0)
     # -> the Ney estimate is exactly 1.0 — the valid all-mass-backs-
     # off corner; with d3 = 0 the top order is pure MLE regardless
-    assert m.d3 == 0.0 and m.d2 == 1.0
-    row = lm.perplexity3(docs, m).head()
+    assert m.discounts == (0.0, 1.0)
+    row = lm.perplexity(docs, m).head()
     assert row["n_tokens"] == 3
     assert math.isclose(row["ppl"], 1.0, abs_tol=1e-12)
 
@@ -387,13 +387,13 @@ def test_trigram_degenerate_mle_pin(spark):
 def test_trigram_deterministic_under_repartition(spark, corpus, model3):
     a = {
         r["doc_id"]: r["ppl"]
-        for r in lm.perplexity3(corpus, model3)
+        for r in lm.perplexity(corpus, model3)
         .select("doc_id", F.round("ppl", 6).alias("ppl"))
         .collect()
     }
     b = {
         r["doc_id"]: r["ppl"]
-        for r in lm.perplexity3(corpus.repartition(5), model3)
+        for r in lm.perplexity(corpus.repartition(5), model3)
         .select("doc_id", F.round("ppl", 6).alias("ppl"))
         .collect()
     }
@@ -404,28 +404,27 @@ def test_lm3_write_read_round_trip_and_order_guard(spark, corpus, model3, tmp_pa
     import os
 
     path = str(tmp_path / "lm3")
-    lm.lm3_write(model3, path)
-    loaded = lm.lm3_read(spark, path)
-    assert (loaded.d3, loaded.d2, loaded.n_bitypes) == (
-        model3.d3, model3.d2, model3.n_bitypes,
+    lm.lm_write(model3, path)
+    loaded = lm.lm_read(spark, path)
+    assert (loaded.discounts, loaded.n_types) == (
+        model3.discounts, model3.n_types,
     )
     a = {
         r["doc_id"]: r["ppl"]
-        for r in lm.perplexity3(corpus, model3)
+        for r in lm.perplexity(corpus, model3)
         .select("doc_id", F.round("ppl", 6).alias("ppl")).collect()
     }
     b = {
         r["doc_id"]: r["ppl"]
-        for r in lm.perplexity3(corpus, loaded)
+        for r in lm.perplexity(corpus, loaded)
         .select("doc_id", F.round("ppl", 6).alias("ppl")).collect()
     }
     assert a == b
-    # a bigram reader must refuse a trigram model and vice versa
-    with pytest.raises(ValueError, match="order"):
-        lm.lm_read(spark, path)
+    # the one reader keeps the order it was written with
+    assert loaded.order == 3
     os.remove(os.path.join(path, "_lm_meta.json"))
     with pytest.raises(FileNotFoundError, match="torn"):
-        lm.lm3_read(spark, path)
+        lm.lm_read(spark, path)
 
 
 def test_d_equals_one_round_trip(spark, tmp_path):
@@ -439,12 +438,12 @@ def test_d_equals_one_round_trip(spark, tmp_path):
         [(1, "aa bb cc"), (2, "bb aa"), (3, "cc aa")],
         "doc_id long, text string",
     )
-    m = lm.train_bigram_kn(corpus1, min_count=1, persist=False)
-    assert m.discount == 1.0
+    m = lm.train_kn(corpus1, 2, min_count=1, persist=False)
+    assert m.discounts == (1.0,)
     path = str(tmp_path / "lm_d1")
     lm.lm_write(m, path)
     loaded = lm.lm_read(spark, path)
-    assert loaded.discount == 1.0
+    assert loaded.discounts == (1.0,)
     a = _ppl_map(lm.perplexity(corpus1, m))
     b = _ppl_map(lm.perplexity(corpus1, loaded))
     assert a == b
@@ -457,8 +456,8 @@ def test_d_equals_zero_score_stays_total(spark, corpus):
     perplexity silently UNDERestimated. The scorer now floors the
     final probability at 1/(vocab_size+1), keeping the score total
     (every token contributes a finite log-prob)."""
-    m = lm.train_bigram_kn(corpus, min_count=2, discount=0.0, persist=False)
-    assert m.discount == 0.0
+    m = lm.train_kn(corpus, 2, min_count=2, discounts=(0.0,), persist=False)
+    assert m.discounts == (0.0,)
     # 'the' is a trained context; 'the dog' and 'the fish' are seen
     # bigrams but 'the log'... pick a pair definitely absent: 'cat'
     # followed by 'dog' never occurs, both in vocab
@@ -474,10 +473,70 @@ def test_d_equals_zero_score_stays_total(spark, corpus):
     # better via the dropped token
     assert rows[1]["ppl"] > rows[2]["ppl"]
     # trigram scorer: same totality contract at d3 == d2 == 0
-    m3 = lm.train_trigram_kn(
-        corpus, min_count=2, d3=0.0, d2=0.0, persist=False
+    m3 = lm.train_kn(
+        corpus, 3, min_count=2, discounts=(0.0, 0.0), persist=False
     )
-    rows3 = {r["doc_id"]: r for r in lm.perplexity3(probe, m3).collect()}
+    rows3 = {r["doc_id"]: r for r in lm.perplexity(probe, m3).collect()}
     for r in rows3.values():
         assert r["logprob"] is not None and math.isfinite(r["logprob"])
         assert r["ppl"] is not None and math.isfinite(r["ppl"])
+
+
+def test_lm_write_crash_window_leaves_torn_model(
+    spark, corpus, model3, tmp_path, monkeypatch
+):
+    """A subtable write that fails mid-lm_write over an existing model
+    must leave no meta (the old one is retired first), so lm_read
+    refuses the torn directory; a rewrite over it round-trips."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "lm_crash")
+    lm.lm_write(model3, path)
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, p, *args, **kwargs):
+        if p.endswith("level2"):
+            raise RuntimeError("injected subtable write failure")
+        return real_parquet(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        lm.lm_write(model3, path)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(path, "_lm_meta.json"))
+    with pytest.raises(FileNotFoundError, match="torn"):
+        lm.lm_read(spark, path)
+    lm.lm_write(model3, path)
+    loaded = lm.lm_read(spark, path)
+    assert (loaded.order, loaded.discounts) == (3, model3.discounts)
+    assert _ppl_map(lm.perplexity(corpus, loaded)) == _ppl_map(
+        lm.perplexity(corpus, model3)
+    )
+
+
+def test_lm_read_refuses_corrupt_meta(spark, model3, tmp_path):
+    """An order lm_write never writes, or a discount outside [0, 1] or
+    non-finite, is a corrupt meta: lm_read fails loudly instead of
+    scoring with it."""
+    import json
+    import os
+
+    path = str(tmp_path / "lm_corrupt")
+    lm.lm_write(model3, path)
+    meta_path = os.path.join(path, "_lm_meta.json")
+    with open(meta_path) as fh:
+        good = json.load(fh)
+    for patch in (
+        {"order": 4},
+        {"discounts": [1.5, 0.5]},
+        {"discounts": [0.5, -0.1]},
+        {"discounts": [float("nan"), 0.5]},
+        {"discounts": [0.5, float("inf")]},
+        {"discounts": [0.5]},
+    ):
+        with open(meta_path, "w") as fh:
+            json.dump({**good, **patch}, fh)
+        with pytest.raises(ValueError, match="order|discounts"):
+            lm.lm_read(spark, path)

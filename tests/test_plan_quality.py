@@ -807,24 +807,28 @@ def test_cheap_to_recompute_catches_scalar_pandas_udf(spark, tmp_path):
     assert not cheap_to_recompute(scan.select("id", slow_hash("x").alias("h")))
 
 
-def test_lm_scoring_is_broadcast_joins_single_doc_shuffle(spark, sf_dir):
+@pytest.mark.parametrize("order", [2, 3])
+def test_lm_scoring_is_broadcast_joins_single_doc_shuffle(spark, sf_dir, order):
     """LM perplexity scoring (operators/lm.py): with
-    broadcast_model=True every model join must be a broadcast hash
-    join in the scan stage — no sort-merge join, and the only
-    hash-partitioning exchanges on the scoring side are the final
-    per-document aggregate (plus its left-join back to the id spine).
-    A corpus-side shuffle per model table would make a 100 TB score
-    pay five corpus shuffles instead of one."""
+    broadcast_model=True every model join — one per level, one per
+    level's context table, the unigram continuation table, and the
+    vocabulary unk-map per n-gram column (5 joins at order 2, 8 at
+    order 3) — must be a broadcast hash join in the scan stage: no
+    sort-merge join, and the only hash-partitioning exchanges on the
+    scoring side are the final per-document aggregate (plus its
+    left-join back to the id spine). A corpus-side shuffle per model
+    table would make a 100 TB score pay one corpus shuffle per model
+    join instead of one."""
     from mfdb_hafro_etl_spark.catalog import load_table
     from mfdb_hafro_etl_spark.operators import lm as lmod
 
     docs = load_table(spark, sf_dir, "documents")
-    model = lmod.train_bigram_kn(
-        docs.filter(F.col("doc_id") % 5 > 0), persist=False
+    model = lmod.train_kn(
+        docs.filter(F.col("doc_id") % 5 > 0), order, persist=False
     )
     plan = _plan(lmod.perplexity(docs, model))
     assert _count(r"SortMergeJoin", plan) == 0, plan[:3000]
-    assert _count(r"BroadcastHashJoin", plan) >= 6
+    assert _count(r"BroadcastHashJoin", plan) >= {2: 6, 3: 8}[order]
     # the only DOCUMENT-keyed exchange is the per-doc sum (the
     # remaining hash exchanges in the plan are the inlined
     # persist=False training lineage, keyed on token types, which a
@@ -857,25 +861,3 @@ def test_ivf_catalog_probe_partition_prunes(spark, sf_dir, tmp_path):
     # the meta row guards query dims
     with pytest.raises(ValueError, match="dims|dim"):
         sim.ann_ivf_topk_catalog(spark, "t_ivf_cat_plan", qvec[:-1], k=5)
-
-
-def test_lm3_scoring_is_broadcast_joins_single_doc_shuffle(spark, sf_dir):
-    """Trigram-KN scoring (operators/lm.py:perplexity3) has the same
-    plan contract as the bigram scorer one order up: with
-    broadcast_model=True the FIVE model joins (tri/ctx3/cont2/ctx2/
-    cont1) plus the three vocab unk-maps are all broadcast hash joins
-    in the scan stage — no sort-merge join — and the only
-    document-keyed exchange is the final per-doc sum. A corpus-side
-    shuffle per model table would make a 100 TB score pay eight
-    corpus shuffles instead of one."""
-    from mfdb_hafro_etl_spark.catalog import load_table
-    from mfdb_hafro_etl_spark.operators import lm as lmod
-
-    docs = load_table(spark, sf_dir, "documents")
-    model = lmod.train_trigram_kn(
-        docs.filter(F.col("doc_id") % 5 > 0), persist=False
-    )
-    plan = _plan(lmod.perplexity3(docs, model))
-    assert _count(r"SortMergeJoin", plan) == 0, plan[:3000]
-    assert _count(r"BroadcastHashJoin", plan) >= 8
-    assert _count(r"hashpartitioning\(doc_id", plan) <= 1

@@ -166,10 +166,36 @@ def test_local_df_empty_and_fallback(spark):
 
     empty = local_df(spark, [], "a INT, b STRING")
     assert empty.count() == 0 and [f.name for f in empty.schema.fields] == ["a", "b"]
-    # struct rows encoded as tuples aren't arrow-ingestible -> must
-    # fall back to createDataFrame, not error
+    # struct rows encoded as tuples must load; list-encoded ones are
+    # refused by pyarrow and must fall back to createDataFrame, not
+    # error
     df = local_df(spark, [((1, "x"),)], "s STRUCT<a INT, b STRING>")
     assert df.collect()[0]["s"]["a"] == 1
+    df = local_df(spark, [([1, "x"],)], "s STRUCT<a INT, b STRING>")
+    assert df.collect()[0]["s"]["a"] == 1
+
+
+def test_local_df_arrow_path_error_propagates(spark, monkeypatch):
+    """An error from creating the arrow-backed frame is not a row shape
+    pyarrow refuses: it must propagate instead of silently re-running
+    the rows through the Python path."""
+    import pyarrow as pa
+
+    from mfdb_hafro_etl_spark.localrel import local_df
+
+    calls = []
+    real = spark.createDataFrame
+
+    def create(data, *args, **kwargs):
+        calls.append(type(data).__name__)
+        if isinstance(data, pa.Table):
+            raise RuntimeError("injected arrow-path failure")
+        return real(data, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", create)
+    with pytest.raises(RuntimeError, match="injected"):
+        local_df(spark, [(1, "x")], "a INT, b STRING")
+    assert calls == ["Table"]
 
 
 # ------------------------------------------------------- compaction
