@@ -400,7 +400,7 @@ def test_trigram_deterministic_under_repartition(spark, corpus, model3):
     assert a == b
 
 
-def test_lm3_write_read_round_trip_and_order_guard(spark, corpus, model3, tmp_path):
+def test_lm_write_read_round_trip_order3(spark, corpus, model3, tmp_path):
     import os
 
     path = str(tmp_path / "lm3")
