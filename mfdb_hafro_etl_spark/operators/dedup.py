@@ -32,10 +32,7 @@ from mfdb_hafro_etl_spark.operators.skew import hot_key_anti_join
 from mfdb_hafro_etl_spark.operators.text import tokens
 from mfdb_hafro_etl_spark.session import _leaf_scan_bytes, pin_to_result
 from mfdb_hafro_etl_spark.sinks.index import (  # noqa: F401 (re-exported write side)
-    _LSH_META,
-    _catalog_meta,
-    _check_params,
-    _read_meta,
+    _lsh_read,
     lsh_index_append,
     lsh_index_compact,
     lsh_index_publish_bucketed,
@@ -916,43 +913,91 @@ def dedup_against(
       corpus doc (match_id = smallest bucket-mate), for docs not
       already exact.
     Clean batch docs produce no row (the common case at scale — the
-    anti-join shape keeps the output increment-sized).
+    output stays increment-sized).
 
-    Scale design: both probes are equi-joins against corpus-side
-    structures that a real deployment materializes once (hash index,
-    band table — see lsh_band_table); the batch side shuffles only
-    increment-sized data. No corpus self-join ever happens. The
-    exact arm groups the corpus per hash BEFORE the join, so a
-    boilerplate text duplicated M times in the corpus contributes
+    Scale design: the corpus side (hash index, band table) is built
+    here from ``corpus`` and probed by _lsh_probe, the same probe
+    dedup_against_index runs against a materialized index; the batch
+    side shuffles only increment-sized data. No corpus self-join ever
+    happens. The exact arm groups the corpus per hash BEFORE the join,
+    so a boilerplate text duplicated M times in the corpus contributes
     one row, not M, to the join."""
-    exact_index = (
-        corpus.select(
-            F.md5(F.col(text_col)).alias("__h__"), F.col(id_col).alias("__cid__")
-        )
-        .groupBy("__h__")
-        .agg(F.min("__cid__").alias("match_id"))
-    )
-    b_hash = batch.select(F.col(id_col), F.md5(F.col(text_col)).alias("__h__"))
-    exact = b_hash.join(exact_index, on="__h__").select(
-        F.col(id_col), F.lit("exact").alias("dup_kind"), "match_id"
+    c_hash, c_bands = _lsh_keys(corpus, id_col, text_col, n, k, rows_per_band)
+    corpus_exact = c_hash.groupBy("h").agg(F.min(id_col).alias("cid"))
+    return _lsh_probe(
+        *_lsh_keys(batch, id_col, text_col, n, k, rows_per_band),
+        corpus_exact,
+        c_bands.withColumnRenamed(id_col, "cid"),
+        id_col,
     )
 
-    corpus_bands = lsh_band_table(corpus, id_col, text_col, n, k, rows_per_band)
-    batch_bands = lsh_band_table(batch, id_col, text_col, n, k, rows_per_band)
-    near_all = (
-        batch_bands.join(
-            corpus_bands.select(
-                F.col("band"), F.col("val"), F.col(id_col).alias("__mid__")
-            ),
-            on=["band", "val"],
+
+def _lsh_keys(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    k: int,
+    rows_per_band: int,
+    partitions: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The two LSH probe keys of ``df``: its (id, h) md5 content hashes
+    and its (id, band, val) band table (lsh_band_table). Either side of
+    a probe, and the rows an index append writes."""
+    return (
+        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("h")),
+        lsh_band_table(df, id_col, text_col, n, k, rows_per_band, partitions),
+    )
+
+
+def _lsh_probe(
+    b_hash: DataFrame,
+    batch_bands: DataFrame,
+    corpus_exact: DataFrame,
+    corpus_bands: DataFrame,
+    id_col: str,
+    exclude: DataFrame | None = None,
+) -> DataFrame:
+    """The one LSH corpus probe, behind dedup_against (corpus side
+    computed) and dedup_against_index (corpus side read by
+    sinks.index._lsh_read). Batch side: ``b_hash`` (id, h) and
+    ``batch_bands`` (id, band, val); corpus side: ``corpus_exact``
+    (h, cid) and ``corpus_bands`` (band, val, cid). Both arms are
+    equi-joins on the corpus keys; their matches resolve in ONE
+    aggregate over the MATCHED rows only (increment-sized): exact wins
+    over near, then the smallest match id.
+
+    ``exclude``: single-column DataFrame of corpus ids whose matches
+    are discarded BEFORE min-id resolution, so a surviving verdict
+    always points at the smallest NON-excluded match. The LSH ingest
+    step (sinks.index._lsh_ingest) passes the batch's own ids: a batch
+    redelivered after its index append then reproduces the first
+    delivery's verdicts instead of matching its own admissions. The set
+    is increment-sized by contract (it anti-joins matched rows, which
+    are already increment-scale).
+
+    Returns (id, dup_kind, match_id)."""
+    matches = (
+        b_hash.join(corpus_exact, on="h")
+        .select(F.col(id_col), F.lit(0).alias("kr"), F.col("cid").alias("mid"))
+        .unionByName(
+            batch_bands.join(corpus_bands, on=["band", "val"]).select(
+                F.col(id_col), F.lit(1).alias("kr"), F.col("cid").alias("mid")
+            )
         )
-        .groupBy(id_col)
-        .agg(F.min("__mid__").alias("match_id"))
     )
-    near = near_all.join(exact.select(id_col), on=id_col, how="left_anti").select(
-        F.col(id_col), F.lit("near").alias("dup_kind"), "match_id"
+    if exclude is not None:
+        excl = exclude.toDF("__xid__").dropDuplicates()
+        matches = matches.join(excl, on=matches["mid"] == excl["__xid__"], how="left_anti")
+    return (
+        matches.groupBy(id_col)
+        .agg(F.min(F.struct("kr", "mid")).alias("v"))
+        .select(
+            F.col(id_col),
+            F.when(F.col("v.kr") == 0, "exact").otherwise("near").alias("dup_kind"),
+            F.col("v.mid").alias("match_id"),
+        )
     )
-    return exact.unionByName(near)
 
 
 #: compressed leaf-scan bytes below which duplicate_spans skips its
@@ -1077,31 +1122,8 @@ def duplicate_spans(
 
 # ---------------------------------------------------------------------
 # materialized incremental LSH index (standing dedup service): the
-# probe lives here, the write side in sinks.index
+# probe lives here, the layout and the write side in sinks.index
 # ---------------------------------------------------------------------
-
-def _read_index_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
-    """Read an index subtable, returning an empty frame with the
-    expected schema when the directory holds no parquet data files
-    (the empty-corpus bootstrap — see dedup_against_index). Genuine
-    read failures (corrupt footers, schema drift, a MISSING directory)
-    still propagate: only the exists-but-holds-no-data case
-    short-circuits. A missing subtable dir under a surviving meta is a
-    torn index — silently treating it as empty would mark every probe
-    doc 'novel' (silent recall loss), so we raise instead."""
-    import os
-
-    if not os.path.isdir(path):
-        raise FileNotFoundError(
-            f"LSH index subtable directory {path} is missing while the "
-            f"index meta survives — the index is torn; rebuild it rather "
-            f"than probing an empty corpus."
-        )
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return spark.read.parquet(path)
-    return spark.createDataFrame([], ddl)
-
 
 def dedup_against_index(
     spark: SparkSession,
@@ -1113,106 +1135,31 @@ def dedup_against_index(
     k: int = 8,
     rows_per_band: int = 2,
     catalog_prefix: str | None = None,
-    exclude_match_ids: DataFrame | None = None,
-    batch_bands: DataFrame | None = None,
-    batch_hash: DataFrame | None = None,
 ) -> DataFrame:
     """dedup_against, probing a MATERIALIZED index instead of
     recomputing the corpus side per batch: same output contract
     ((id, dup_kind, match_id); exact = identical text, near = shares
-    an LSH band bucket, exact wins). Only increment-sized data
-    shuffles: both probes are equi-joins of the batch against the
-    index scan, min-id aggregation happens over MATCHED rows only
-    (the semi-join keeps it increment-sized), and the corpus is
-    never re-shingled.
+    an LSH band bucket, exact wins) and the same probe (_lsh_probe).
+    Only increment-sized data shuffles: both probes are equi-joins of
+    the batch against the index scan, min-id aggregation happens over
+    MATCHED rows only (the semi-join keeps it increment-sized), and the
+    corpus is never re-shingled.
 
     ``catalog_prefix``: probe the catalog-bucketed publication
     (lsh_index_publish_bucketed) instead of the parquet path — the
     corpus side of both probe joins then reads pre-bucketed on the
     join keys and never shuffles (plan-pinned); parameters validate
-    against the published meta table.
-
-    ``exclude_match_ids``: single-column DataFrame of corpus ids
-    whose matches are discarded BEFORE min-id resolution, so a
-    surviving verdict always points at the smallest NON-excluded
-    match. The streaming ingest (streaming.jobs.stream_dedup_ingest)
-    passes the current batch's own ids here: a batch redelivered
-    after its index append then reproduces the first delivery's
-    verdicts exactly instead of matching its own admissions. Also the
-    'don't match my own data_source' knob for batch callers. The set
-    is increment-sized by contract (it anti-joins matched rows,
-    which are already increment-scale).
-
-    ``batch_bands``/``batch_hash``: precomputed band table /
-    (id, h md5) table for the SAME batch and params — computed-once
-    reuse for callers that need these tables anyway (the streaming
-    ingest computes them once for probe + intra-batch dedup +
-    append)."""
-    import os
-
-    id_t = batch.schema[id_col].dataType.simpleString()
-    params = {"n": n, "k": k, "rows_per_band": rows_per_band}
-    if catalog_prefix is not None:
-        _check_params(_catalog_meta(spark, catalog_prefix), params, catalog_prefix)
-        exact_index = spark.table(f"{catalog_prefix}_exact")
-        corpus_bands_src = spark.table(f"{catalog_prefix}_bands")
-    else:
-        _check_params(_read_meta(path, _LSH_META), params, path)
-        # structural empty check, not schema inference: an index
-        # bootstrapped from an EMPTY corpus (or one whose docs are all
-        # too short to shingle) has subtable dirs with no data files —
-        # Spark's partitionBy write of an empty frame emits only
-        # _SUCCESS — and a raw read raises UNABLE_TO_INFER_SCHEMA.
-        # The meta check above already authenticated the index, so a
-        # data-file-free subtable IS the empty corpus, probed as an
-        # empty frame (every batch doc comes back novel).
-        exact_index = _read_index_or_empty(
-            spark, os.path.join(path, "exact"), f"h string, cid {id_t}"
-        )
-        corpus_bands_src = None
-    excl = (
-        exclude_match_ids.toDF("__xid__").dropDuplicates()
-        if exclude_match_ids is not None
-        else None
+    against the published meta table."""
+    corpus_exact, corpus_bands = _lsh_read(
+        spark,
+        path,
+        {"n": n, "k": k, "rows_per_band": rows_per_band},
+        batch.schema[id_col].dataType.simpleString(),
+        catalog_prefix,
     )
-    b_hash = (
-        batch_hash
-        if batch_hash is not None
-        else batch.select(F.col(id_col), F.md5(F.col(text_col)).alias("h"))
+    return _lsh_probe(
+        *_lsh_keys(batch, id_col, text_col, n, k, rows_per_band),
+        corpus_exact,
+        corpus_bands,
+        id_col,
     )
-    exact_matches = b_hash.join(exact_index, on="h")
-    if excl is not None:
-        exact_matches = exact_matches.join(
-            excl, on=exact_matches["cid"] == excl["__xid__"], how="left_anti"
-        )
-    exact = (
-        exact_matches.groupBy(id_col)
-        .agg(F.min("cid").alias("match_id"))
-        .select(F.col(id_col), F.lit("exact").alias("dup_kind"), "match_id")
-    )
-    corpus_bands = (
-        corpus_bands_src
-        if corpus_bands_src is not None
-        else _read_index_or_empty(
-            spark,
-            os.path.join(path, "bands"),
-            f"cid {id_t}, val string, band int",
-        )
-    )
-    if batch_bands is None:
-        batch_bands = lsh_band_table(batch, id_col, text_col, n, k, rows_per_band)
-    near_matches = batch_bands.join(
-        corpus_bands.select("band", "val", F.col("cid").alias("__mid__")),
-        on=["band", "val"],
-    )
-    if excl is not None:
-        near_matches = near_matches.join(
-            excl, on=near_matches["__mid__"] == excl["__xid__"], how="left_anti"
-        )
-    near_all = near_matches.groupBy(id_col).agg(
-        F.min("__mid__").alias("match_id")
-    )
-    near = near_all.join(exact.select(id_col), on=id_col, how="left_anti").select(
-        F.col(id_col), F.lit("near").alias("dup_kind"), "match_id"
-    )
-    return exact.unionByName(near)

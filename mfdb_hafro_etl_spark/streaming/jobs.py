@@ -639,6 +639,15 @@ def finalize_session_updates(updates: DataFrame) -> DataFrame:
     )
 
 
+def _write_marker(marker: str) -> None:
+    """Commit a batch: the atomic (tmp + rename) write of its marker."""
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write("ok")
+    os.replace(tmp, marker)
+
+
 def replace_partitions_handler(path: str, partition_cols: Sequence[str]):
     """The foreachBatch handler behind ingest_replace_partitions,
     exposed so its retry idempotence is directly testable: calling it
@@ -658,11 +667,7 @@ def replace_partitions_handler(path: str, partition_cols: Sequence[str]):
                 .partitionBy(*list(partition_cols))
                 .parquet(path)
             )
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp, marker)
+        _write_marker(marker)
 
     return handle
 
@@ -713,231 +718,22 @@ def dedup_ingest_handler(
     rows_per_band: int = 2,
 ):
     """The foreachBatch handler behind stream_dedup_ingest, exposed so
-    its retry idempotence is directly testable (marker short-circuit,
-    and — for the crash window between the index append and the
-    marker — verdict reproducibility via the probe's own-batch match
-    exclusion)."""
-    from mfdb_hafro_etl_spark.operators.dedup import (
-        dedup_against_index,
-        lsh_band_table,
-    )
-    from mfdb_hafro_etl_spark.sinks.index import lsh_index_append
+    its retry idempotence is directly testable: the marker
+    short-circuit around one run of the LSH ingest step
+    (sinks.index._lsh_ingest), whose re-run reproduces the same
+    verdicts for the crash window between the index append and the
+    marker."""
+    from mfdb_hafro_etl_spark.sinks.index import _lsh_ingest
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         marker = os.path.join(verdict_dir, "_commits", str(batch_id))
         if os.path.exists(marker):
             return
-        batch = batch_df.persist()  # probed by 3 consumers below
-        pins = []
-        try:
-            if not batch.isEmpty():
-                batch_ids = batch.select(F.col(id_col)).dropDuplicates()
-                # the batch's md5 and band tables feed the corpus
-                # probe, the intra-batch dedup, AND the index append:
-                # compute each ONCE and pin (uncached, the minhash md5
-                # pass over the shingle explode would run three times)
-                b_hash = batch.select(
-                    F.col(id_col), F.md5(F.col(text_col)).alias("h")
-                ).persist()
-                # size the increment's minhash fan-out to the stream's
-                # state width (auto_state_partitions: source-bytes-
-                # scaled, 2×parallelism-capped) instead of the batch
-                # default defaultParallelism — a kilobyte micro-batch
-                # otherwise schedules 32-task md5/aggregate stages per
-                # trigger (measured −0.5 s/arm at sf0.1; at scale the
-                # state width reaches 2×parallelism and the fan-out is
-                # as wide as before)
-                band_width = int(
-                    spark.conf.get("spark.sql.shuffle.partitions")
-                )
-                bands = lsh_band_table(
-                    batch, id_col, text_col, n, k, rows_per_band,
-                    partitions=band_width,
-                ).persist()
-                pins += [b_hash, bands]
-                # 1) verdicts vs the standing corpus. Matches against
-                # this batch's OWN ids are excluded BEFORE min-id
-                # resolution: a batch redelivered after a crash in the
-                # append-to-marker window then reproduces the first
-                # delivery's verdicts (its admissions are already in
-                # the index but can never match themselves), keeping
-                # the at-least-once foreachBatch contract effectively
-                # exactly-once for the verdict log.
-                vs_corpus = dedup_against_index(
-                    spark,
-                    index_path,
-                    batch,
-                    id_col,
-                    text_col,
-                    n,
-                    k,
-                    rows_per_band,
-                    exclude_match_ids=batch_ids,
-                    batch_bands=bands,
-                    batch_hash=b_hash,
-                ).withColumn("origin", F.lit("corpus"))
-                # 2) intra-batch first-occurrence dedup, deterministic
-                # (min id wins) so the admitted set is a pure function
-                # of the batch content — redelivery-stable. Both arms
-                # are running-min windows (min id among STRICTLY
-                # smaller-id group-mates; NULL = first occurrence):
-                # one shuffle of increment-sized rows each, where the
-                # natural aggregate+self-join formulation shuffles the
-                # batch twice and joins — the same answer, measured
-                # ~25% faster per micro-batch and strictly fewer
-                # exchanges at any scale. RANGE frames, not ROWS: a
-                # ROWS frame includes TIED ids (an upstream that
-                # re-emits the same record twice inside one file would
-                # flag the doc as an exact duplicate of ITSELF and
-                # never admit it), while a range frame over the
-                # numeric id excludes ties — the strict c.id < b.id
-                # the sequential contract (and the arm's SQL oracle)
-                # specifies.
-                from pyspark.sql.window import Window
-
-                wh = (
-                    Window.partitionBy("h")
-                    .orderBy(F.col(id_col))
-                    .rangeBetween(Window.unboundedPreceding, -1)
-                )
-                intra_exact = (
-                    b_hash.select(
-                        F.col(id_col),
-                        F.min(id_col).over(wh).alias("match_id"),
-                    )
-                    .filter(F.col("match_id").isNotNull())
-                    .select(
-                        F.col(id_col),
-                        F.lit("exact").alias("dup_kind"),
-                        "match_id",
-                        F.lit("batch").alias("origin"),
-                    )
-                )
-                wb = (
-                    Window.partitionBy("band", "val")
-                    .orderBy(F.col(id_col))
-                    .rangeBetween(Window.unboundedPreceding, -1)
-                )
-                intra_near = (
-                    bands.select(
-                        F.col(id_col),
-                        F.min(id_col).over(wb).alias("__m__"),
-                    )
-                    .filter(F.col("__m__").isNotNull())
-                    .groupBy(id_col)
-                    .agg(F.min("__m__").alias("match_id"))
-                    .select(
-                        F.col(id_col),
-                        F.lit("near").alias("dup_kind"),
-                        "match_id",
-                        F.lit("batch").alias("origin"),
-                    )
-                )
-                # 3) one verdict per id: exact beats near, corpus beats
-                # batch, then smallest match id — a total order, so the
-                # verdict log is deterministic.
-                ranked = (
-                    vs_corpus.unionByName(intra_exact)
-                    .unionByName(intra_near)
-                    .groupBy(id_col)
-                    .agg(
-                        F.min(
-                            F.struct(
-                                F.when(F.col("dup_kind") == "exact", 0)
-                                .otherwise(1)
-                                .alias("kr"),
-                                F.when(F.col("origin") == "corpus", 0)
-                                .otherwise(1)
-                                .alias("orr"),
-                                F.col("match_id"),
-                                F.col("dup_kind"),
-                                F.col("origin"),
-                            )
-                        ).alias("v")
-                    )
-                    .select(
-                        F.col(id_col),
-                        F.col("v.dup_kind").alias("dup_kind"),
-                        F.col("v.match_id").alias("match_id"),
-                        F.col("v.origin").alias("origin"),
-                    )
-                )
-                verdicts = ranked.persist()
-                # EAGER fill before forking the three sink writes (the
-                # eager-cache-barrier rule, session.release_cached_
-                # intermediates docstring): the verdict write and the
-                # two index-append writes run as CONCURRENT jobs, and
-                # concurrent first consumers of a lazy cache each
-                # recompute the whole probe chain (corpus probe +
-                # intra-batch windows — the batch's real work) instead
-                # of reading it once. One id-sized count materializes
-                # verdicts AND the upstream b_hash/bands pins; the
-                # three writes then run cache-served.
-                verdicts.count()
-                try:
-                    # 4) admit novel docs to the standing index and
-                    # overwrite this batch's verdict partition
-                    # (idempotent) — all BEFORE the marker. The three
-                    # writes (index bands, index exact, verdict log)
-                    # are independent sinks of one deterministic batch
-                    # computation, so they run as concurrent Spark
-                    # jobs; redelivery after a crash anywhere in this
-                    # window reproduces every write bit-identically
-                    # (own-batch match exclusion + min-id absorption),
-                    # so no relative ordering between them matters.
-                    admitted = batch.join(
-                        verdicts.select(id_col), on=id_col, how="left_anti"
-                    )
-                    flagged = verdicts.select(id_col)
-
-                    def _append_index() -> None:
-                        lsh_index_append(
-                            admitted,
-                            index_path,
-                            id_col,
-                            text_col,
-                            n,
-                            k,
-                            rows_per_band,
-                            # the admitted docs' band/hash rows are the
-                            # already-pinned tables minus flagged ids
-                            _bands=bands.join(
-                                flagged, on=id_col, how="left_anti"
-                            ),
-                            _exact=b_hash.join(
-                                flagged, on=id_col, how="left_anti"
-                            ).select("h", F.col(id_col).alias("cid")),
-                        )
-
-                    def _write_verdicts() -> None:
-                        verdicts.write.mode("overwrite").parquet(
-                            os.path.join(verdict_dir, f"batch_id={batch_id}")
-                        )
-
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    from pyspark.util import inheritable_thread_target
-
-                    inherit = inheritable_thread_target(spark)
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        futures = [
-                            pool.submit(inherit(w))
-                            for w in (_append_index, _write_verdicts)
-                        ]
-                        for f in futures:
-                            f.result()
-                finally:
-                    verdicts.unpersist()
-        finally:
-            for p in pins:
-                p.unpersist()
-            batch.unpersist()
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp, marker)
+        _lsh_ingest(
+            batch_df, index_path, os.path.join(verdict_dir, f"batch_id={batch_id}"),
+            id_col, text_col, n, k, rows_per_band,
+        )
+        _write_marker(marker)
 
     return handle
 
@@ -956,10 +752,12 @@ def stream_dedup_ingest(
     """Streaming dedup ingestion against a STANDING corpus — the
     online closure of the dedup family's batch topology (one-shot
     pairs -> incremental probe -> materialized index -> this): every
-    micro-batch is probed against the materialized LSH index
-    (sinks.index.lsh_index_write), deduplicated within itself
-    (min id wins), and its novel documents are appended to the index
-    so batch N+1 dedups against everything admitted through batch N.
+    micro-batch runs the one LSH ingest step (sinks.index._lsh_ingest)
+    — probed against the materialized LSH index
+    (sinks.index.lsh_index_write) by the same probe as
+    dedup_against_index, deduplicated within itself (min id wins), and
+    its novel documents appended to the index so batch N+1 dedups
+    against everything admitted through batch N.
     The index must exist (bootstrap = lsh_index_write on the initial
     corpus, possibly empty); parameters are meta-validated on every
     probe and append, so a drifted (n, k, rows_per_band) config fails
@@ -978,7 +776,7 @@ def stream_dedup_ingest(
     own-batch match exclusion and the per-batch verdict overwrite
     (crash-window redelivery reproduces the identical verdicts and
     re-appends identical index rows, which min-id resolution
-    absorbs). Scale shape: every join in the handler is increment ×
+    absorbs). Scale shape: every join in the step is increment ×
     index equi-join or increment × increment; nothing rescans or
     re-shingles the corpus, so a 100 TB standing corpus costs each
     micro-batch only its own band/hash probes.
@@ -988,18 +786,12 @@ def stream_dedup_ingest(
     (ties excluded so a record re-emitted twice in one file can't
     duplicate itself), and range frames require a numeric ordering
     key. The batch index API (dedup_against_index) accepts string ids;
-    this streaming wrapper validates up front and refuses them rather
-    than throwing an opaque AnalysisException mid-stream."""
-    from pyspark.sql.types import NumericType
+    this wrapper refuses them before the stream starts, and the step
+    refuses them on every batch (so a direct dedup_ingest_handler call
+    does too), rather than an opaque AnalysisException mid-batch."""
+    from mfdb_hafro_etl_spark.sinks.index import _require_numeric_id
 
-    if not isinstance(stream_df.schema[id_col].dataType, NumericType):
-        raise TypeError(
-            f"stream_dedup_ingest requires a numeric id column for its "
-            f"tie-safe RANGE windows; {id_col!r} is "
-            f"{stream_df.schema[id_col].dataType.simpleString()}. Cast or "
-            f"derive a numeric surrogate id, or use dedup_against_index "
-            f"batch-side, which supports string ids."
-        )
+    _require_numeric_id(stream_df.schema, id_col)
     spark = stream_df.sparkSession
     with _scoped_state_partitions(spark, state_partitions):
         q = (

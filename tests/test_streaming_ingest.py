@@ -610,23 +610,78 @@ def test_dedup_ingest_duplicate_rows_within_batch_not_self_flagged(
     ]
 
 
-def test_stream_dedup_ingest_rejects_string_ids_up_front(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["stream", "handler"])
+def test_stream_dedup_ingest_rejects_string_ids_up_front(spark, tmp_path, entry):
     """The intra-batch running-min uses RANGE frames (tie-safe) which
-    need a NUMERIC ordering key; a string id must be refused loudly at
-    start, not as an AnalysisException mid-stream (ADVICE r8)."""
-    import pytest
-
-    from mfdb_hafro_etl_spark.streaming.jobs import stream_dedup_ingest
+    need a NUMERIC ordering key; a string id must be refused loudly
+    before any work — at stream start, and by the ingest step when the
+    handler is called directly — not as an AnalysisException
+    mid-batch."""
+    from mfdb_hafro_etl_spark.streaming.jobs import (
+        dedup_ingest_handler,
+        stream_dedup_ingest,
+    )
 
     index = _build_index(spark, tmp_path)
-    src = str(tmp_path / "src_str")
-    os.makedirs(src)
-    _write_jsonl(src, "b0.jsonl", [{"doc_id": "a1", "text": "x"}], mtime=1_000)
-    stream = spark.readStream.schema("doc_id STRING, text STRING").json(src)
-    with pytest.raises(TypeError, match="numeric id"):
-        stream_dedup_ingest(
-            stream, index, str(tmp_path / "v_str"), "doc_id", "text"
-        )
+    vdir = str(tmp_path / "v_str")
+    if entry == "stream":
+        src = str(tmp_path / "src_str")
+        os.makedirs(src)
+        _write_jsonl(src, "b0.jsonl", [{"doc_id": "a1", "text": "x"}], mtime=1_000)
+        stream = spark.readStream.schema("doc_id STRING, text STRING").json(src)
+        with pytest.raises(TypeError, match="numeric id"):
+            stream_dedup_ingest(stream, index, vdir, "doc_id", "text")
+    else:
+        batch = spark.createDataFrame([("a1", _B1[1][1])], "doc_id STRING, text STRING")
+        with pytest.raises(TypeError, match="numeric id"):
+            dedup_ingest_handler(index, vdir, "doc_id", "text")(batch, 0)
+    assert not os.path.exists(vdir)
+    assert spark.read.parquet(os.path.join(index, "exact")).count() == len(_CORPUS)
+
+
+def test_dedup_ingest_handler_jobs_and_pins(spark, tmp_path, monkeypatch):
+    """One micro-batch of the _B1 fixture submits at most 26 Spark jobs
+    (the same count at 2, 4 and 8 cores), and when the sink writes fork
+    the batch, its b_hash/bands pins and the verdicts are all fully
+    cached. Without the pins or the eager verdict barrier the
+    concurrent writes re-run the minhash explode inside their own
+    stages, which the job count alone does not show."""
+    from mfdb_hafro_etl_spark.sinks import index as ix
+    from mfdb_hafro_etl_spark.streaming.jobs import dedup_ingest_handler
+
+    sc = spark.sparkContext
+
+    def cached() -> dict[int, tuple[int, int]]:
+        return {
+            i.id(): (i.numCachedPartitions(), i.numPartitions())
+            for i in sc._jsc.sc().getRDDStorageInfo()
+        }
+
+    index = _build_index(spark, tmp_path)
+    before = set(cached())
+    at_fork = []
+    real = ix._concurrently
+
+    def spy(session, *writes):
+        at_fork.append({k: v for k, v in cached().items() if k not in before})
+        return real(session, *writes)
+
+    monkeypatch.setattr(ix, "_concurrently", spy)
+    handle = dedup_ingest_handler(index, str(tmp_path / "v"), "doc_id", "text")
+    batch = _docs_df(spark, _B1)
+    tracker = sc.statusTracker()
+    sc.setJobGroup("dedup_ingest_jobs", "one micro-batch")
+    try:
+        handle(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(tracker.getJobIdsForGroup("dedup_ingest_jobs"))
+    assert 0 < n_jobs <= 26
+    # the step's fork comes first; the index append's own subtable
+    # writes fork after it
+    pins = at_fork[0]
+    assert len(pins) == 4 and all(n == total for n, total in pins.values()), pins
 
 
 # ------------------------------------------- streaming IVF ingest
