@@ -110,13 +110,6 @@ FIXTURE_DDL: dict[str, str] = {
 }
 
 
-def schema_of(table: str) -> T.StructType:
-    ddl = TESTDATA_DDL.get(table) or FIXTURE_DDL.get(table)
-    if ddl is None:
-        raise KeyError(f"unknown table {table!r}")
-    return T.StructType.fromDDL(ddl)
-
-
 _NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
 
 

@@ -15,13 +15,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def group_sum(df: DataFrame, keys: Sequence[str], value: str, out: str, scale: float = 1.0) -> DataFrame:
-    """A1: group-by + sum (+optional unit scale, e.g. kg→t /1000,
-    reference R/initdb.R:461-464)."""
-    agg = (F.sum(value) * scale if scale != 1.0 else F.sum(value)).alias(out)
-    return df.groupBy(*keys).agg(agg)
-
-
 def proportions_within(
     df: DataFrame,
     keys: Sequence[str],

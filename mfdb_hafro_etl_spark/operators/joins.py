@@ -91,34 +91,6 @@ def temporal_join(
     return left.alias("l").join(r, on=cond, how=how)
 
 
-def join_coalesce(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    prefer_right_when: Column | None = None,
-    cols: Sequence[str] = (),
-    how: str = "left",
-) -> DataFrame:
-    """J9: join then conditionally pick right-side duplicates of
-    ``cols`` (reference R/initdb_add_shrimp.R:338-341 ``areacell =
-    ifelse(kfteg %in% …, areacell.y, areacell.x)``). With no
-    condition, falls back to plain coalesce(right, left)."""
-    l, r = left.alias("l"), right.alias("r")
-    out = l.join(F.broadcast(r), on=list(on), how=how)
-    for c in cols:
-        lc, rc = F.col(f"l.{c}"), F.col(f"r.{c}")
-        if prefer_right_when is not None:
-            picked = F.when(prefer_right_when, rc).otherwise(lc)
-        else:
-            picked = F.coalesce(rc, lc)
-        out = out.withColumn(f"__{c}__", picked)
-    keep = [c for c in left.columns if c not in cols]
-    sel = [F.col(f"l.{c}") for c in keep]
-    sel += [F.col(f"__{c}__").alias(c) for c in cols]
-    sel += [F.col(f"r.{c}") for c in right.columns if c not in cols and c not in on and c not in left.columns]
-    return out.select(*sel)
-
-
 def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
     """J6: rows of left with no key match in right (the incremental
     'drop already-imported stations' idiom, reference

@@ -232,14 +232,6 @@ class _BitReader:
         raise ValueError("invalid JPEG Huffman code")
 
 
-def _extend(v: int, nbits: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map received magnitude bits to a signed
-    coefficient value."""
-    if nbits == 0:
-        return 0
-    return v if v >= (1 << (nbits - 1)) else v - (1 << nbits) + 1
-
-
 def _split_entropy(data: bytes, start: int) -> tuple[list[bytes], int]:
     """From ``start``, collect unstuffed entropy-coded segments split
     at restart markers; returns (segments, index of the terminating

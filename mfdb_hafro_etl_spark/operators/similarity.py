@@ -26,10 +26,10 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mfdb_hafro_etl_spark.operators.vecmat import _vec_matrix
 from mfdb_hafro_etl_spark.sinks.index import (  # noqa: F401 (re-exported write side)
-    _IVF_META,
-    _catalog_meta,
-    _read_meta,
+    _ivf_read,
+    _ivf_vectors,
     build_ivf_index,
     ivf_index_append,
     ivf_index_compact,
@@ -60,6 +60,15 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _top_k(scored: DataFrame, k: int, id_col: str, exclude_id: int | None) -> DataFrame:
+    """The k best rows of an (id, cos_sim) table without ``exclude_id``,
+    ordered (cos_sim desc, id asc) — a total order, so ties are
+    deterministic."""
+    if exclude_id is not None:
+        scored = scored.filter(F.col(id_col) != exclude_id)
+    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+
+
 def _cosine_score_table(
     emb: DataFrame, query_vec: list[float], id_col: str, vec_col: str
 ) -> DataFrame:
@@ -84,7 +93,7 @@ def _cosine_score_table(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = _vec_matrix(pdf[vec_col])
             vn = np.sqrt((V * V).sum(axis=1))
             vn[vn == 0] = 1.0
             yield pd.DataFrame(
@@ -111,10 +120,7 @@ def cosine_topk(
     Returns (id, cos_sim) with deterministic tie-break on id.
     cos_sim rounded to 6 for engine-portable comparison; scoring runs
     in the Arrow matvec kernel, the top-k as TakeOrdered."""
-    scored = _cosine_score_table(emb, query_vec, id_col, vec_col)
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return _top_k(_cosine_score_table(emb, query_vec, id_col, vec_col), k, id_col, exclude_id)
 
 
 #: auto n_blocks target: rows per block. MEASURED knee, not a memory
@@ -271,7 +277,7 @@ def cosine_pairs(
             ids = part[id_col].to_numpy(dtype=np.int64)
             if len(ids) == 0:
                 return ids, np.zeros((0, 1))
-            M = np.array([np.asarray(v, dtype=np.float64) for v in part[vec_col]])
+            M = _vec_matrix(part[vec_col])
             nrm = np.linalg.norm(M, axis=1, keepdims=True)
             nrm[nrm == 0] = 1.0
             return ids, M / nrm
@@ -364,9 +370,7 @@ def ann_lsh_topk(
     scored = _cosine_score_table(
         bucketed.filter(F.col("bucket") == qbucket), query_vec, id_col, vec_col
     )
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return _top_k(scored, k, id_col, exclude_id)
 
 
 def _pynorm(v: list[float]) -> float:
@@ -394,9 +398,13 @@ def _ivf_centroids(
 
 
 def _ivf_assign_expr(cents: list[tuple[int, list[float]]], vec_col: str) -> Column:
-    """Nearest-centroid assignment as ONE SQL expression (see
-    ann_ivf_topk plan notes). Requires a ``__vnorm__`` column holding
-    norm(vec_col)."""
+    """Nearest-centroid assignment as ONE SQL expression, the
+    expression-level reference for _ivf_assign_table: argmax over the
+    literal centroid array via array_sort on (-cos, cid) structs, so
+    ties resolve to the smallest centroid id on both engines, with
+    cosines rounded to 6 before the comparison so cross-engine ulp
+    noise can't flip an assignment. Requires a ``__vnorm__`` column
+    holding norm(vec_col)."""
 
     def _dlit(x: float) -> str:
         return f"CAST('{x!r}' AS DOUBLE)"
@@ -447,9 +455,7 @@ def _ivf_assign_table(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            V = _vec_matrix(pdf[vec_col])
             v_norm = np.sqrt((V * V).sum(axis=1))
             cos = np.round((V @ C.T) / np.outer(v_norm, c_norm), 6)
             # argmax returns the FIRST maximum; cents are cid-ascending,
@@ -508,9 +514,7 @@ def _kmeans_refine(
 
     def mean_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        M = np.array(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].iloc[order]]
-        )
+        M = _vec_matrix(pdf[vec_col].iloc[order])
         return pd.DataFrame(
             {"cid": [int(key[0])], "centroid": [M.mean(axis=0).tolist()]}
         )
@@ -567,79 +571,42 @@ def _ivf_probes(
     ]
 
 
-def _centroid_list(cents: DataFrame) -> list[tuple[int, list[float]]]:
-    """Collect a (cid, centroid) table to the driver-side list the
-    probes and the assign kernel take (dimension-sized)."""
-    return [(int(r[0]), [float(x) for x in r[1]]) for r in cents.collect()]
-
-
-def _check_query_dims(meta: dict, query_vec: list[float], where: str) -> None:
-    if meta.get("dims") and len(query_vec) != int(meta["dims"]):
-        raise ValueError(
-            f"IVF index {where} holds {meta['dims']}-dim vectors; the "
-            f"query vector has {len(query_vec)} dims."
-        )
-
-
-def ann_ivf_topk_catalog(
-    spark,
-    table_prefix: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Probe a PUBLISHED IVF index (ivf_index_publish) by catalog
-    name: centroids come from the dimension-sized catalog table, the
-    scan touches only the n_probe matching ``__cid__`` partitions of
-    the vectors table (physical partition pruning — the catalog twin
-    of ann_ivf_topk_indexed), and the meta row guards dims so a
-    query vector of the wrong dimensionality refuses instead of
-    scoring garbage."""
-    _check_query_dims(_catalog_meta(spark, table_prefix), query_vec, table_prefix)
-    cents = _centroid_list(spark.table(f"{table_prefix}_centroids"))
-    probes = _ivf_probes(cents, query_vec, n_probe)
-    idx = spark.table(f"{table_prefix}_vectors")
-    scored = _cosine_score_table(
-        idx.filter(F.col("__cid__").isin(probes)), query_vec, id_col, vec_col
-    )
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
-
-
 def ann_ivf_topk_indexed(
     spark,
-    path: str,
+    path: str | None,
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_id: int | None = None,
+    catalog_prefix: str | None = None,
 ) -> DataFrame:
     """Probe a materialized IVF index (build_ivf_index): pick the
     n_probe nearest centroids driver-side (centroid table is
     dimension-sized), then scan ONLY those clusters' partitions —
     `.explain` shows PartitionFilters on ``__cid__`` and a
     PartitionCount of n_probe, so the pruning is physical, not
-    logical. The meta file guards the probe exactly as the catalog
-    twin's meta row does: a torn index (no meta) and a query vector of
-    the wrong dimensionality refuse instead of scoring garbage."""
-    import os
+    logical.
 
-    _check_query_dims(_read_meta(path, _IVF_META), query_vec, path)
-    cents = _centroid_list(spark.read.parquet(os.path.join(path, "centroids")))
+    ``catalog_prefix``: probe the catalog publication
+    (ivf_index_publish) by table name instead of the parquet path; its
+    vectors table is partitioned on ``__cid__`` too. Either way the
+    index meta guards the probe: a torn index (no meta file, or a meta
+    table without exactly one row) and a query vector of the wrong
+    dimensionality refuse instead of scoring garbage."""
+    meta, cents = _ivf_read(spark, path, catalog_prefix)
+    if meta.get("dims") and len(query_vec) != int(meta["dims"]):
+        raise ValueError(
+            f"IVF index {catalog_prefix or path} holds {meta['dims']}-dim "
+            f"vectors; the query vector has {len(query_vec)} dims."
+        )
     probes = _ivf_probes(cents, query_vec, n_probe)
-    idx = spark.read.parquet(os.path.join(path, "vectors"))
+    vectors = _ivf_vectors(spark, path, catalog_prefix)
     scored = _cosine_score_table(
-        idx.filter(F.col("__cid__").isin(probes)), query_vec, id_col, vec_col
+        vectors.filter(F.col("__cid__").isin(probes)), query_vec, id_col, vec_col
     )
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return _top_k(scored, k, id_col, exclude_id)
 
 
 def knn_join(
@@ -655,7 +622,7 @@ def knn_join(
 ) -> DataFrame:
     """Bulk approximate kNN join: top-k corpus neighbors for EVERY
     query row at once (the batch companion to the one-query
-    ann_ivf_topk).
+    ann_ivf_topk_indexed).
 
     Shape: corpus vectors are assigned to their nearest IVF centroid
     (numpy Arrow kernel, narrow map); each query expands to its
@@ -705,7 +672,7 @@ def knn_join(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = _vec_matrix(pdf[vec_col])
             v_norm = np.sqrt((V * V).sum(axis=1))
             cos = np.round((V @ C.T) / np.outer(v_norm, c_norm), 6)
             # same decision rule as _ivf_probes: cos desc, cid asc
@@ -732,12 +699,10 @@ def knn_join(
             ).astype({query_id_col: "int64", id_col: "int64", "cos_sim": "float64"})
         doc_order = np.argsort(cpdf[id_col].to_numpy(), kind="stable")
         ids = cpdf[id_col].to_numpy()[doc_order]
-        M = np.array(
-            [np.asarray(v, dtype=np.float64) for v in cpdf[vec_col].iloc[doc_order]]
-        )
+        M = _vec_matrix(cpdf[vec_col].iloc[doc_order])
         mn = np.sqrt((M * M).sum(axis=1))
         mn[mn == 0] = 1.0
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
+        Q = _vec_matrix(qpdf[vec_col])
         qn = np.sqrt((Q * Q).sum(axis=1))
         qn[qn == 0] = 1.0
         S = np.round((Q @ M.T) / np.outer(qn, mn), 6)
@@ -819,9 +784,9 @@ def semantic_dedup(
     The cluster assignment turns the quadratic all-pairs problem into
     per-cluster blocks — the published SemDeDup recipe (k-means
     buckets, within-bucket cosine). Plan shape: one narrow map for
-    assignment (same expression as ann_ivf_topk), then a self-join
-    ON the cluster id — a shuffle keyed by cluster, each cluster's
-    pair block evaluated independently. ``n_centroids=None``
+    assignment (the _ivf_assign_table kernel build_ivf_index uses),
+    then a shuffle keyed by cluster, each cluster's pair block
+    evaluated independently. ``n_centroids=None``
     (default) DERIVES k from a count — max(16, ceil(N/4096)) — so
     clusters stay ~4096 rows and total within-cluster work stays
     ~N·4096 (linear) at any corpus size; a FIXED k is quadratic in N
@@ -873,9 +838,7 @@ def semantic_dedup(
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        M = np.array(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].iloc[order]]
-        )
+        M = _vec_matrix(pdf[vec_col].iloc[order])
         nrm = np.linalg.norm(M, axis=1, keepdims=True)
         nrm[nrm == 0] = 1.0
         Mn = M / nrm
@@ -915,64 +878,6 @@ def semantic_dedup(
     return assigned.groupBy("__cid__").applyInPandas(
         kernel, schema=f"{id_col} {id_t}, kept boolean, dup_of {id_t}"
     )
-
-
-def ann_ivf_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-    kmeans_iters: int = 0,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the clustered scale
-    path beside LSH: vectors are assigned to their nearest centroid;
-    a query scores only the ``n_probe`` clusters nearest its vector,
-    scanning n_probe/n_centroids of the data.
-
-    Centroids are the ``n_centroids`` lowest-id vectors — a
-    deterministic "training sample" (no RNG, engine-reproducible);
-    ``kmeans_iters>0`` Lloyd-refines them for recall at the cost of
-    exact SQL-oracle parity (the oracle mirrors the seed centroids).
-    Assignment is pure Column algebra:
-    argmax over the broadcast centroid array via array_sort on
-    (-cos, cid) structs — ties resolve to the smallest centroid id on
-    both engines. Cosines are rounded to 6 before comparison so
-    cross-engine ulp noise can't flip an assignment.
-
-    At scale the assignment is a narrow map; build_ivf_index writes it
-    partitioned by cluster id so every later probe is a partition-
-    pruned scan (this function is the index-free one-shot variant).
-    """
-    cents = _ivf_centroids(emb, n_centroids, id_col, vec_col)
-    cents = _kmeans_refine(emb, cents, kmeans_iters, id_col, vec_col)
-    # the assignment evaluates n_centroids array-cosines per row; a
-    # single-row-group parquet input would run that on one core, so
-    # fan the scan out first (explicit count — AQE must not coalesce
-    # a CPU-bound stage back down)
-    emb = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    # Assignment via the same numpy Arrow kernel the materialized
-    # index uses (_ivf_assign_table) — one (batch × dim) @ (dim × k)
-    # matmul per Arrow batch. _ivf_assign_expr remains the
-    # expression-level reference (its interpreted 16-struct
-    # transform/sort measures ~10× slower); a parity test pins the
-    # two to identical assignments, so the one-shot and indexed
-    # paths share one decision rule.
-    probes = _ivf_probes(cents, query_vec, n_probe)
-    scored = _cosine_score_table(
-        _ivf_assign_table(emb, cents, id_col, vec_col).filter(
-            F.col("__cid__").isin(probes)
-        ),
-        query_vec,
-        id_col,
-        vec_col,
-    )
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
 def quantize_embeddings(
@@ -1020,7 +925,7 @@ def quantize_embeddings(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = _vec_matrix(pdf[vec_col])
             with np.errstate(divide="ignore", invalid="ignore"):
                 x = np.where(scale > 0, (V - lo) / np.where(scale > 0, scale, 1.0), 0.0)
             codes = np.floor(x + 0.5)

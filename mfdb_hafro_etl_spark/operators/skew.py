@@ -105,26 +105,3 @@ def hot_key_anti_join(
     local = probe.sparkSession.createDataFrame(rows, keys.schema)
     return probe.join(F.broadcast(local), on=list(on), how="left_anti")
 
-
-def salted_group_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: str,
-    out: str,
-    salt_from: Sequence[str],
-    buckets: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation for skewed group keys: partial sums per
-    (key, salt) — spreading a hot key over ``buckets`` reducers —
-    then the final sum per key over at most ``buckets`` rows each.
-    (Spark's partial aggregation already does this map-side when
-    upstream partitioning is random; explicit salting covers inputs
-    already clustered by the hot key, where map-side combine can't
-    help.)"""
-    salt = F.pmod(F.hash(*[F.col(c) for c in salt_from]), F.lit(buckets))
-    partial = (
-        df.withColumn("__salt__", salt)
-        .groupBy(*keys, "__salt__")
-        .agg(F.sum(value).alias("__part__"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__part__").alias(out))

@@ -70,12 +70,6 @@ def with_group_count(
     return df.withColumn(count_col, F.count(F.lit(1)).over(w))
 
 
-def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """F7: grouped filter n()>1 — duplicate detection (reference
-    R/shrimp_support_tables.R:467-468,1919-1920)."""
-    return with_group_count(df, keys, "__n__").filter(F.col("__n__") > 1).drop("__n__")
-
-
 def time_range_moving_agg(
     df,
     ts_col: str,

@@ -1,8 +1,8 @@
 """Landings pipelines (reference R/initdb.R:322-612).
 
 Current landings ∪ historical file landings, vessel-history
-resolution, port→division bucketing, ling/tusk published-landings
-rescale, and the foreign/old landings month-spread grids.
+resolution, port→division bucketing, and the ling/tusk
+published-landings rescale.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from mfdb_hafro_etl_spark.exprcache import column_template
 from mfdb_hafro_etl_spark.functions.conditionals import nvl
 from mfdb_hafro_etl_spark.functions.domain import range_bucket, vessel_id
-from mfdb_hafro_etl_spark.operators.grids import month_spread
 
 # rescale_by_published's driver-side collect bound: official
 # per-species-per-year published figures run to hundreds of rows at
@@ -266,22 +265,3 @@ def _import_filter_cols() -> tuple:
         (F.col("weight_total") > 0) & F.col("weight_total").isNotNull(),
     ]
 
-
-def build_month_spread_landings(
-    by_year: DataFrame,
-    value_expr: F.Column,
-    sampling_type: str,
-    gear: str,
-    areacell: str = "2741",
-) -> DataFrame:
-    """Foreign/old landings month-spread (reference
-    R/initdb.R:499-545): annual totals fanned over 12 months with
-    weight_total = 1000*value/12, fixed gear + areacell placeholders."""
-    annual = by_year.withColumn("__v__", value_expr * 1000)
-    spread = month_spread(annual, "__v__", "weight_total")
-    return (
-        spread.withColumn("sampling_type", F.lit(sampling_type))
-        .withColumn("gear", F.lit(gear))
-        .withColumn("areacell", F.lit(areacell))
-        .drop("__v__")
-    )

@@ -1,7 +1,8 @@
 """The write side of the engine's two standing indexes: the MinHash-LSH
 dedup index (probed by operators.dedup.dedup_against_index through
 _lsh_read) and the IVF ANN index (probed by
-operators.similarity.ann_ivf_topk_indexed and ann_ivf_topk_catalog).
+operators.similarity.ann_ivf_topk_indexed through _ivf_read and
+_ivf_vectors).
 Both follow the reference's pattern of dimension tables built once and
 joined per import (R/initdb.R:151): the corpus side is materialized
 once, increments are appended, accumulated files are compacted, and
@@ -17,6 +18,9 @@ here:
   table (_publish), and its reader (_catalog_meta);
 - IVF append admission (_ivf_append), behind both ivf_index_append
   and streaming.jobs.ivf_ingest_handler;
+- the IVF layout: build_ivf_index writes it, _ivf_read (meta and
+  centroids) and _ivf_vectors read it, for a path or a catalog
+  publication;
 - the LSH layout (_lsh_write, _lsh_read) and the LSH ingest step
   (_lsh_ingest) behind streaming.jobs.dedup_ingest_handler.
 
@@ -466,6 +470,56 @@ def lsh_index_publish_bucketed(
 
 
 # ------------------------------------------------------------ IVF index
+# The layout: ``vectors`` (id, vector) partitioned by ``__cid__`` and
+# ``centroids`` (cid, centroid), or the ``<prefix>_vectors`` and
+# ``<prefix>_centroids`` tables of a catalog publication.
+# build_ivf_index and _ivf_append write it, _ivf_read and _ivf_vectors
+# read it; the probe (operators.similarity.ann_ivf_topk_indexed) sees
+# only their columns.
+def _centroid_list(cents: DataFrame) -> list[tuple[int, list[float]]]:
+    """Collect a (cid, centroid) table to the driver-side list the
+    probes and the assign kernel take (dimension-sized)."""
+    return [(int(r[0]), [float(x) for x in r[1]]) for r in cents.collect()]
+
+
+def _ivf_read(
+    spark: SparkSession,
+    path: str | None,
+    catalog_prefix: str | None = None,
+    cents_memo: dict | None = None,
+) -> tuple[dict, list[tuple[int, list[float]]]]:
+    """The meta and the driver-side centroid list of an IVF index: from
+    the parquet ``path``, loud (FileNotFoundError) on a torn index with
+    no meta file, or from the catalog publication ``catalog_prefix``
+    (ivf_index_publish), loud on a torn meta table. ``cents_memo``: a
+    dict a caller keeps across reads of one path, so the centroids,
+    frozen per build, are collected once per build_id."""
+    if catalog_prefix is not None:
+        return (
+            _catalog_meta(spark, catalog_prefix),
+            _centroid_list(spark.table(f"{catalog_prefix}_centroids")),
+        )
+    meta = _read_meta(path, _IVF_META)
+    memo = cents_memo if cents_memo is not None else {}
+    if meta["build_id"] not in memo:
+        memo.clear()  # one build live at a time
+        memo[meta["build_id"]] = _centroid_list(
+            spark.read.parquet(os.path.join(path, "centroids"))
+        )
+    return meta, memo[meta["build_id"]]
+
+
+def _ivf_vectors(
+    spark: SparkSession, path: str | None, catalog_prefix: str | None = None
+) -> DataFrame:
+    """The vectors table of an IVF index, partitioned by ``__cid__`` so
+    a filter on it prunes partitions physically. It carries no meta
+    check of its own: read it after _ivf_read."""
+    if catalog_prefix is not None:
+        return spark.table(f"{catalog_prefix}_vectors")
+    return spark.read.parquet(os.path.join(path, "vectors"))
+
+
 def build_ivf_index(
     emb: DataFrame,
     path: str,
@@ -490,7 +544,6 @@ def build_ivf_index(
     later sessions can probe without the source table)."""
     from mfdb_hafro_etl_spark.localrel import local_df
     from mfdb_hafro_etl_spark.operators.similarity import (
-        _centroid_list,
         _ivf_assign_table,
         _ivf_centroids,
         _kmeans_refine,
@@ -500,7 +553,7 @@ def build_ivf_index(
     params = {"n_centroids": n_centroids, "kmeans_iters": kmeans_iters}
     if not rebuild:
         try:
-            built_with = _read_meta(path, _IVF_META)
+            built_with, built_cents = _ivf_read(spark, path)
         except (OSError, ValueError):
             built_with = None
         # an index built with different parameters is NOT valid for
@@ -509,7 +562,7 @@ def build_ivf_index(
         if built_with is not None and all(
             built_with.get(k) == v for k, v in params.items()
         ):
-            return _centroid_list(spark.read.parquet(os.path.join(path, "centroids")))
+            return built_cents
     _retire_meta(path, _IVF_META)
     # the new build_id makes every old ledger record stale anyway
     shutil.rmtree(os.path.join(path, _LEDGER), ignore_errors=True)
@@ -522,16 +575,15 @@ def build_ivf_index(
     # (tasks × n_centroids small files); with it each partition
     # directory gets files from only the tasks owning that key.
     # partitionOverwriteMode=static for THIS write, whatever the session
-    # conf says (replace_by_source sets dynamic session-wide): a rebuild
-    # with fewer/refined centroids must truncate ALL old __cid__=
-    # partitions — under dynamic overwrite, cells absent from the new
-    # assignment would keep their stale files behind a fresh meta
-    vectors = os.path.join(path, "vectors")
+    # conf says: a rebuild with fewer/refined centroids must truncate
+    # ALL old __cid__= partitions — under dynamic overwrite, cells
+    # absent from the new assignment would keep their stale files
+    # behind a fresh meta
     assigned.repartition(n_centroids, F.col("__cid__")).write.mode(
         "overwrite"
     ).option("partitionOverwriteMode", "static").partitionBy(
         "__cid__"
-    ).parquet(vectors)
+    ).parquet(os.path.join(path, "vectors"))
     local_df(
         spark, [(cid, cv) for cid, cv in cents], "cid INT, centroid ARRAY<DOUBLE>"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
@@ -543,7 +595,7 @@ def build_ivf_index(
         _IVF_META,
         {
             **params,
-            "rows_at_build": spark.read.parquet(vectors).count(),
+            "rows_at_build": _ivf_vectors(spark, path).count(),
             "dims": len(cents[0][1]) if cents else 0,
             "build_id": uuid.uuid4().hex,
         },
@@ -609,13 +661,10 @@ def _ivf_append(
     ``cents_memo``: a dict the caller keeps across appends to collect
     the centroids once per build_id. Returns the ledger record
     {n_appended, build_id} and the number of cells written."""
-    from mfdb_hafro_etl_spark.operators.similarity import (
-        _centroid_list,
-        _ivf_assign_table,
-    )
+    from mfdb_hafro_etl_spark.operators.similarity import _ivf_assign_table
 
     spark = batch.sparkSession
-    meta = _read_meta(path, _IVF_META)  # loud on a torn index
+    meta, cents = _ivf_read(spark, path, cents_memo=cents_memo)  # loud on a torn index
     build_id, rows_at_build, dims = meta["build_id"], int(meta["rows_at_build"]), int(meta["dims"])
     batch = batch.persist()
     try:
@@ -657,13 +706,6 @@ def _ivf_append(
                 "recall degrades silently — rebuild with build_ivf_index("
                 "..., rebuild=True), or raise max_appended_frac deliberately."
             )
-        memo = cents_memo if cents_memo is not None else {}
-        if build_id not in memo:
-            memo.clear()  # one build live at a time
-            memo[build_id] = _centroid_list(
-                spark.read.parquet(os.path.join(path, "centroids"))
-            )
-        cents = memo[build_id]
         # the assign kernel's width follows the batch's OWN volume
         # (64 KB of vectors per task), capped at defaultParallelism:
         # kilobyte micro-batches get a few tasks, large appends the
@@ -955,7 +997,7 @@ def ivf_index_publish(
     meta = _read_meta(path, _IVF_META)  # loud on a half-built source index
 
     def save_vectors(table: str) -> None:
-        spark.read.parquet(os.path.join(path, "vectors")).repartition(
+        _ivf_vectors(spark, path).repartition(
             int(meta["n_centroids"]), F.col("__cid__")
         ).write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
             "__cid__"

@@ -104,8 +104,6 @@ def replace_by_source(
     API's year-range filters — a year-bounded sample_count scans only
     the matching year directories of each source.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = df.withColumn(partition_col, F.lit(data_source))
     # Cluster rows to the partition layout before the write: without
     # it every task writes a file into every (source, year) directory
@@ -115,7 +113,9 @@ def replace_by_source(
     # into multiple tasks, so one huge source/year can't serialize
     # into a single writer.
     out = out.hint("rebalance", partition_col, *sub_partition_cols)
-    out.write.mode("overwrite").partitionBy(partition_col, *sub_partition_cols).parquet(path)
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        partition_col, *sub_partition_cols
+    ).parquet(path)
 
 
 def read_fact(spark: SparkSession, path: str) -> DataFrame:
@@ -253,10 +253,11 @@ def compact_partitions(
         src.hint("rebalance", *[F.col(c) for c in partition_cols]).write.mode(
             "overwrite"
         ).partitionBy(*partition_cols).parquet(staged)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         spark.read.parquet(staged).hint(
             "rebalance", *[F.col(c) for c in partition_cols]
-        ).write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+        ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            *partition_cols
+        ).parquet(path)
     finally:
         if tmp_dir is None:
             shutil.rmtree(staged, ignore_errors=True)
@@ -359,10 +360,11 @@ def upsert_by_key(
         merged.hint("rebalance", *[F.col(c) for c in parts]).write.mode(
             "overwrite"
         ).partitionBy(*parts).parquet(staged)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         spark.read.parquet(staged).hint(
             "rebalance", *[F.col(c) for c in parts]
-        ).write.mode("overwrite").partitionBy(*parts).parquet(path)
+        ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            *parts
+        ).parquet(path)
     finally:
         if tmp_dir is None:
             shutil.rmtree(staged, ignore_errors=True)

@@ -639,13 +639,13 @@ def finalize_session_updates(updates: DataFrame) -> DataFrame:
     )
 
 
-def _write_marker(marker: str) -> None:
-    """Commit a batch: the atomic (tmp + rename) write of its marker."""
+def _write_marker(marker: str, payload: dict | None = None) -> None:
+    """Commit a batch: the atomic (tmp + rename) write of its marker, a
+    JSON object (``payload``, empty by default)."""
+    from mfdb_hafro_etl_spark.sinks.index import _write_json
+
     os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("ok")
-    os.replace(tmp, marker)
+    _write_json(marker, payload or {})
 
 
 def replace_partitions_handler(path: str, partition_cols: Sequence[str]):
@@ -655,15 +655,14 @@ def replace_partitions_handler(path: str, partition_cols: Sequence[str]):
     short-circuit)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         marker = os.path.join(path, "_commits", str(batch_id))
         if os.path.exists(marker):
             return
         if not batch_df.isEmpty():
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             (
                 batch_df.hint("rebalance", *[F.col(c) for c in partition_cols])
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(*list(partition_cols))
                 .parquet(path)
             )
@@ -844,7 +843,6 @@ def ivf_ingest_handler(
     loudly mid-run; rebuild with build_ivf_index(..., rebuild=True),
     which resets the budget (new build_id), then restart the
     stream."""
-    import json
     import shutil
 
     import pyarrow as pa
@@ -890,11 +888,7 @@ def ivf_ingest_handler(
         tmp_log = os.path.join(bdir, ".part-0.parquet.tmp")
         pq.write_table(tbl, tmp_log)
         os.replace(tmp_log, os.path.join(bdir, "part-0.parquet"))
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, marker)
+        _write_marker(marker, rec)
         # marker durable -> this batch's files may now be compacted
         _clear_pending(index_path, token)
 
@@ -922,7 +916,7 @@ def stream_ivf_ingest(
 
     Returns the per-batch ingest log read back after the availableNow
     run: (n_appended, n_cells) per micro-batch. Probes against the
-    index (ann_ivf_topk_indexed, or ann_ivf_topk_catalog after
+    index (ann_ivf_topk_indexed, by path, or by catalog_prefix after
     ivf_index_publish) see batch N's vectors before batch N+1 lands —
     probe-vs-appended equals probe-vs-rebuilt-with-the-same-centroids
     (the batch append invariant, pinned for the one-shot path by

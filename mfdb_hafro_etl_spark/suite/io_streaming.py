@@ -473,20 +473,20 @@ _STREAM_IVF_SQL = """
 @register("x_stream_ivf_ingest", _STREAM_IVF_SQL)
 def x_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full standing-ANN-service topology in one arm
-    (streaming.jobs.stream_ivf_ingest + similarity.ivf_index_publish
-    + ann_ivf_topk_catalog): the corpus slice (vec_id >= 200) is
-    indexed once (build_ivf_index, seed centroids so the oracle can
-    mirror them), the rest streams in as two availableNow
+    (streaming.jobs.stream_ivf_ingest + similarity.ivf_index_publish +
+    ann_ivf_topk_indexed by catalog_prefix): the corpus slice (vec_id
+    >= 200) is indexed once (build_ivf_index, seed centroids so the
+    oracle can mirror them), the rest streams in as two availableNow
     micro-batches appended exactly-once under the recluster budget,
-    the grown index is published to catalog tables partitioned on
-    the cluster id, and the probe runs against the CATALOG — a
+    the grown index is published to catalog tables partitioned on the
+    cluster id, and the probe runs against the CATALOG — a
     partition-pruned scan by table name. Because appends assign
-    against the index's frozen centroids, probe-vs-streamed-in
-    equals probe-vs-rebuilt-with-the-same-centroids, so the oracle
-    is the one-shot assignment over the whole corpus with the build
-    slice's seed centroids. max_appended_frac=1.0 is the fixture's
-    deliberate loosening (the streamed slice is 2/3 of the built
-    rows at sf0.01); production keeps the default 25% budget."""
+    against the index's frozen centroids, probe-vs-streamed-in equals
+    probe-vs-rebuilt-with-the-same-centroids, so the oracle is the
+    one-shot assignment over the whole corpus with the build slice's
+    seed centroids. max_appended_frac=1.0 is the fixture's deliberate
+    loosening (the streamed slice is 2/3 of the built rows at sf0.01);
+    production keeps the default 25% budget."""
     from mfdb_hafro_etl_spark.operators import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -514,6 +514,6 @@ def x_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = f"ivf_pub_{tok}"
     sim.ivf_index_publish(spark, idx, prefix)
     qvec = [float(x) for x in emb.filter(vid == 0).select("embedding").first()[0]]
-    return sim.ann_ivf_topk_catalog(
-        spark, prefix, qvec, k=10, n_probe=4, exclude_id=0
+    return sim.ann_ivf_topk_indexed(
+        spark, None, qvec, k=10, n_probe=4, exclude_id=0, catalog_prefix=prefix
     )

@@ -275,19 +275,25 @@ def test_ngram_jaccard_hot_shingle_gate(spark):
     assert gated.count() == 0
 
 
-def test_ivf_index_probe_partition_prunes(spark, sf_dir, tmp_path):
-    """A probe against the materialized IVF index must be a
-    partition-pruned scan: PartitionFilters on __cid__ and at most
-    n_probe partitions read — physical pruning, not a post-scan
-    filter."""
+@pytest.mark.parametrize("via", ["path", "catalog"])
+def test_ivf_probe_partition_prunes(spark, sf_dir, tmp_path, via):
+    """A probe of the materialized IVF index, by path or by its catalog
+    publication (ivf_index_publish), must be a partition-pruned scan:
+    PartitionFilters on __cid__ and at most n_probe partitions read —
+    physical pruning, not a post-scan filter. Either way the index
+    meta refuses a query vector of the wrong dimensionality."""
     from mfdb_hafro_etl_spark.catalog import load_table
     from mfdb_hafro_etl_spark.operators import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf")
     sim.build_ivf_index(emb, path, n_centroids=8)
+    prefix = None
+    if via == "catalog":
+        prefix = "t_ivf_cat_plan"
+        sim.ivf_index_publish(spark, path, prefix)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    probe = sim.ann_ivf_topk_indexed(spark, path, qvec, k=5, n_probe=2)
+    probe = sim.ann_ivf_topk_indexed(spark, path, qvec, k=5, n_probe=2, catalog_prefix=prefix)
     plan = _plan(probe)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "__cid__" in m.group(1), plan[:2000]
@@ -297,6 +303,8 @@ def test_ivf_index_probe_partition_prunes(spark, sf_dir, tmp_path):
         n_read = int(m2.group(1) or m2.group(2))
         assert n_read <= 2, plan[:2000]
     assert probe.count() == 5
+    with pytest.raises(ValueError, match="dims|dim"):
+        sim.ann_ivf_topk_indexed(spark, path, qvec[:-1], k=5, catalog_prefix=prefix)
 
 
 def test_ivf_index_rebuilds_on_param_change(spark, sf_dir, tmp_path):
@@ -835,29 +843,3 @@ def test_lm_scoring_is_broadcast_joins_single_doc_shuffle(spark, sf_dir, order):
     # served model reads from parquet instead); a corpus shuffle per
     # model join would show up as more doc_id partitionings
     assert _count(r"hashpartitioning\(doc_id", plan) <= 1
-
-
-def test_ivf_catalog_probe_partition_prunes(spark, sf_dir, tmp_path):
-    """A probe against the PUBLISHED catalog IVF index
-    (similarity.ivf_index_publish + ann_ivf_topk_catalog) must show
-    the same physical partition pruning as the path probe: partition
-    filters on __cid__ and at most n_probe partitions read."""
-    from mfdb_hafro_etl_spark.catalog import load_table
-    from mfdb_hafro_etl_spark.operators import similarity as sim
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf_pub")
-    sim.build_ivf_index(emb, path, n_centroids=8)
-    sim.ivf_index_publish(spark, path, "t_ivf_cat_plan")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    probe = sim.ann_ivf_topk_catalog(spark, "t_ivf_cat_plan", qvec, k=5, n_probe=2)
-    plan = _plan(probe)
-    assert "__cid__" in plan, plan[:2000]
-    m2 = re.search(r"partition count: (\d+)|PartitionCount: (\d+)", plan)
-    if m2:
-        n_read = int(m2.group(1) or m2.group(2))
-        assert n_read <= 2, plan[:2000]
-    assert probe.count() == 5
-    # the meta row guards query dims
-    with pytest.raises(ValueError, match="dims|dim"):
-        sim.ann_ivf_topk_catalog(spark, "t_ivf_cat_plan", qvec[:-1], k=5)

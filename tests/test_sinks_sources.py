@@ -49,6 +49,26 @@ def test_replace_by_source_isolates_partitions(spark, tmp_path):
     assert got == {("a", 9, 90.0), ("b", 3, 30.0)}
 
 
+def test_replace_by_source_leaves_session_overwrite_mode(spark, tmp_path):
+    """replace_by_source overwrites dynamically by a writer option, not
+    by the session conf: on a session set to static it still replaces
+    only its own source's partitions, and the session still reads
+    static afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        path = str(tmp_path / "fact")
+        replace_by_source(spark.createDataFrame([(1, 10.0)], "k INT, v DOUBLE"), path, "a")
+        replace_by_source(spark.createDataFrame([(3, 30.0)], "k INT, v DOUBLE"), path, "b")
+        replace_by_source(spark.createDataFrame([(9, 90.0)], "k INT, v DOUBLE"), path, "a")
+        got = {(r.data_source, r.k, r.v) for r in read_fact(spark, path).collect()}
+        assert got == {("a", 9, 90.0), ("b", 3, 30.0)}
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_materialize_roundtrip_with_clustering(spark, tmp_path):
     df = spark.range(0, 1000).select(
         (F.col("id") % 7).alias("tow"), F.col("id").alias("x")

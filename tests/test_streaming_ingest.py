@@ -735,6 +735,33 @@ def test_ivf_ingest_handler_exactly_once_all_windows(spark, tmp_path):
     assert _vec_rows(spark, path) == after_first
 
 
+def test_ivf_ingest_handler_jobs(spark, tmp_path):
+    """One ivf_ingest_handler call on a fresh handler submits at most 8
+    Spark jobs, and the stream's next batch at most 6 (the same counts
+    at 2, 4 and 8 cores): the handler collects the index's centroids
+    once per build, never reads the standing vectors table, and writes
+    its log record and commit marker without Spark."""
+    from mfdb_hafro_etl_spark.streaming.jobs import ivf_ingest_handler
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    path = _build_ivf(spark, tmp_path)
+    handle = ivf_ingest_handler(path, str(tmp_path / "log_jobs"), max_appended_frac=1.0)
+    counts = []
+    for batch_id, ids in enumerate([range(0, 8), range(8, 16)]):
+        batch = _emb_df(spark, ids)
+        group = f"ivf_ingest_jobs_{batch_id}"
+        sc.setJobGroup(group, "one micro-batch")
+        try:
+            handle(batch, batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts.append(len(tracker.getJobIdsForGroup(group)))
+    assert 0 < counts[1] <= 6 and counts[0] <= 8, counts
+    assert len(_vec_rows(spark, path)) == 56
+
+
 def test_stream_ivf_ingest_probe_equals_rebuilt(spark, tmp_path):
     """After streaming two batches into the standing index, a probe
     must answer row-identically to an index REBUILT from the full
@@ -864,23 +891,37 @@ def test_ivf_batch_append_validates_every_row_like_the_stream(spark, tmp_path, b
 def test_ivf_publish_retires_meta_first_and_guards_torn(spark, tmp_path):
     """ivf_index_publish writes the meta table LAST; a probe against a
     publication whose meta table is missing must fail loudly, and a
-    republish restores it."""
+    republish restores it. The path probe refuses the same way when
+    the index's meta file is missing."""
     import pytest
 
     from mfdb_hafro_etl_spark.operators.similarity import (
-        ann_ivf_topk_catalog,
+        ann_ivf_topk_indexed,
         ivf_index_publish,
     )
+    from mfdb_hafro_etl_spark.sinks.index import _IVF_META
 
     path = _build_ivf(spark, tmp_path)
     ivf_index_publish(spark, path, "t_ivf_torn")
     q = [0.1] * 8
-    assert ann_ivf_topk_catalog(spark, "t_ivf_torn", q, k=3).count() == 3
+
+    def probe(prefix=None):
+        return ann_ivf_topk_indexed(spark, path, q, k=3, catalog_prefix=prefix)
+
+    assert probe("t_ivf_torn").count() == 3
     spark.sql("DROP TABLE t_ivf_torn_meta")
     with pytest.raises(Exception):
-        ann_ivf_topk_catalog(spark, "t_ivf_torn", q, k=3)
+        probe("t_ivf_torn")
     ivf_index_publish(spark, path, "t_ivf_torn")
-    assert ann_ivf_topk_catalog(spark, "t_ivf_torn", q, k=3).count() == 3
+    assert probe("t_ivf_torn").count() == 3
+    # the path probe: a missing meta file is a torn index
+    assert probe().count() == 3
+    meta = os.path.join(path, _IVF_META)
+    os.rename(meta, meta + ".torn")
+    with pytest.raises(FileNotFoundError):
+        probe()
+    os.rename(meta + ".torn", meta)
+    assert probe().count() == 3
 
 
 @pytest.mark.parametrize("kind", ["ivf", "lsh"])
@@ -902,7 +943,7 @@ def test_ivf_publish_reclaims_orphan_only_when_blocking(spark, tmp_path, kind):
         lsh_index_publish_bucketed,
     )
     from mfdb_hafro_etl_spark.operators.similarity import (
-        ann_ivf_topk_catalog,
+        ann_ivf_topk_indexed,
         ivf_index_publish,
     )
 
@@ -923,7 +964,8 @@ def test_ivf_publish_reclaims_orphan_only_when_blocking(spark, tmp_path, kind):
         fh.write("must survive")
     if kind == "ivf":
         ivf_index_publish(spark, _build_ivf(spark, tmp_path), prefix)
-        assert ann_ivf_topk_catalog(spark, prefix, [0.1] * 8, k=3).count() == 3
+        probe = ann_ivf_topk_indexed(spark, None, [0.1] * 8, k=3, catalog_prefix=prefix)
+        assert probe.count() == 3
     else:
         index = _build_index(spark, tmp_path)
         lsh_index_publish_bucketed(spark, index, prefix, n_buckets=4)
