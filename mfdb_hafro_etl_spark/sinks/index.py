@@ -12,8 +12,9 @@ here:
 
 - the parameter meta file: retired first, written last, loud on
   mismatch (_read_meta, _retire_meta, _write_meta, _check_params);
-- compaction, refused while ``_ingest_pending`` sentinels exist
-  (_compact_index);
+- compaction: sinks.tables' one file-set compaction, whose IVF listing
+  leaves out the files of appends with an ``_ingest_pending`` sentinel
+  (lsh_index_compact, ivf_index_compact);
 - catalog publish with orphan-location reclaim and a one-row meta
   table (_publish), and its reader (_catalog_meta);
 - IVF append admission (_ivf_append), behind both ivf_index_append
@@ -80,18 +81,11 @@ def _retire_meta(path: str, name: str) -> None:
         pass
 
 
-def _write_json(dest: str, obj: dict) -> None:
-    tmp = dest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(obj, fh)
-    os.replace(tmp, dest)
-
-
 def _write_meta(path: str, name: str, meta: dict) -> None:
     """The last step of every (re)build, so a probe never validates
     against a half-built index."""
     os.makedirs(path, exist_ok=True)
-    _write_json(os.path.join(path, name), meta)
+    _tables._write_json(os.path.join(path, name), meta)
 
 
 def _check_params(meta: dict, params: dict, where: str) -> None:
@@ -117,94 +111,12 @@ def _catalog_meta(spark: SparkSession, table_prefix: str) -> dict:
     return rows[0].asDict()
 
 
-# ---------------------------------------------------------- compaction
+# --------------------------------------------------- append sentinels
 def _clear_pending(path: str, token: str) -> None:
     try:
         os.remove(os.path.join(path, _PENDING, token))
     except FileNotFoundError:
         pass
-
-
-def _compact_index(spark: SparkSession, path: str, subtables: dict[str, list[str]]) -> dict:
-    """Fold append-accumulated small files back to scan-efficient
-    sizes, per subtable: partitioned ones through
-    sinks.tables.compact_partitions (partition-local rewrites, cells
-    untouched by appends are never rewritten), unpartitioned ones
-    through _compact_flat. The row set is invariant.
-
-    REFUSES while any ``_ingest_pending`` sentinel exists (r9 verdict
-    #5): the streaming IVF ingest's exactly-once guarantee depends on
-    each uncommitted batch's deterministic ``ivfb_<token>.parquet``
-    files surviving until its commit marker exists — compacting them
-    away inside that crash window would make a redelivery re-append
-    rows the compacted files already hold. A crashed-and-never-
-    restarted stream leaves its sentinel behind deliberately: restart
-    the stream so the batch commits, or remove the sentinel manually
-    after verifying the batch's marker exists in the ingest log."""
-    pending_dir = os.path.join(path, _PENDING)
-    pending = sorted(os.listdir(pending_dir)) if os.path.isdir(pending_dir) else []
-    if pending:
-        raise RuntimeError(
-            f"index at {path} has in-flight appends {pending} (sentinels "
-            f"under {_PENDING}): compacting now could fold uncommitted "
-            "files into compacted files, and a crash-window redelivery "
-            "would then DUPLICATE those rows. Let the stream finish (or "
-            "restart it so the batches commit), then compact."
-        )
-    return {
-        name: _tables.compact_partitions(spark, os.path.join(path, name), cols)
-        if cols
-        else _compact_flat(spark, os.path.join(path, name))
-        for name, cols in subtables.items()
-    }
-
-
-def _compact_flat(
-    spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict:
-    """Compact an UNPARTITIONED parquet dir: rewrite via a staging
-    dir when files average under target_bytes/2 (same criterion as
-    compact_partitions, without partition pruning — the table is one
-    logical partition)."""
-    import tempfile
-
-    stats = _tables.table_file_stats(spark, path)
-    n_files = sum(n for _, n, _ in stats)
-    n_bytes = sum(b for _, _, b in stats)
-    if n_files <= 1 or n_bytes / n_files >= target_bytes / 2:
-        return {"compacted": [], "files_before": n_files, "files_after": n_files}
-    # stage NEXT TO the target (same filesystem) so the swap below is a
-    # pair of atomic renames, never a copy
-    staged = tempfile.mkdtemp(
-        prefix=".compact_flat_", dir=os.path.dirname(path.rstrip("/"))
-    )
-    try:
-        df = spark.read.parquet(path)
-        df.repartition(max(1, 1 + n_bytes // target_bytes)).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        # Swap the staged output into place with directory renames instead
-        # of read(staged)->overwrite(path): Spark's overwrite deletes the
-        # target before committing, so a failure mid-rewrite would destroy
-        # the live subtable with no recovery path. Each rename is atomic;
-        # the pair is not — a failure between them rolls back to the
-        # original, and a PROCESS DEATH in that (microsecond) window
-        # leaves the original intact under the .__retired__ name, which
-        # is the manual recovery path. Either way the data always exists
-        # in exactly one committed copy.
-        retired = path.rstrip("/") + ".__retired__"
-        shutil.rmtree(retired, ignore_errors=True)
-        os.rename(path, retired)
-        try:
-            os.rename(staged, path)
-        except BaseException:
-            os.rename(retired, path)  # roll back: original table returns
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    after = sum(n for _, n, _ in _tables.table_file_stats(spark, path))
-    return {"compacted": [path], "files_before": n_files, "files_after": after}
 
 
 # ------------------------------------------------------------- publish
@@ -313,22 +225,21 @@ def _lsh_write(b_hash: DataFrame, bands: DataFrame, id_col: str, path: str, mode
 
 def _read_index_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     """Read an index subtable, returning an empty frame with the
-    expected schema when the directory holds no parquet data files
-    (the empty-corpus bootstrap). Genuine read failures (corrupt
-    footers, schema drift, a MISSING directory) still propagate: only
-    the exists-but-holds-no-data case short-circuits. A missing
-    subtable dir under a surviving meta is a torn index — silently
-    treating it as empty would mark every probe doc 'novel' (silent
-    recall loss), so we raise instead."""
+    expected schema when the directory holds no parquet data files a
+    reader sees (the empty-corpus bootstrap). Genuine read failures
+    (corrupt footers, schema drift, a MISSING directory) still
+    propagate: only the exists-but-holds-no-data case short-circuits.
+    A missing subtable dir under a surviving meta is a torn index —
+    silently treating it as empty would mark every probe doc 'novel'
+    (silent recall loss), so we raise instead."""
     if not os.path.isdir(path):
         raise FileNotFoundError(
             f"LSH index subtable directory {path} is missing while the "
             f"index meta survives — the index is torn; rebuild it rather "
             f"than probing an empty corpus."
         )
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return spark.read.parquet(path)
+    if _tables.visible_files(path):
+        return spark.read.parquet(path)
     return spark.createDataFrame([], ddl)
 
 
@@ -426,17 +337,18 @@ def lsh_index_append(
 
 
 def lsh_index_compact(spark: SparkSession, path: str) -> dict:
-    """Fold accumulated append files back to scan-efficient sizes
-    (_compact_index); returns the per-subtable compaction reports.
+    """Fold accumulated append files of both subtables back to
+    scan-efficient sizes (sinks.tables.compact_partitions, which
+    replaces exactly the files it listed, so an append committed while
+    it runs survives); returns the per-subtable compaction reports.
     The LSH index needs no sentinel for a CRASHED ingest: it ABSORBS
     duplicate rows (probes resolve min-id over the union), so
     compacting inside a streaming crash window is safe by semantics.
-    Run it not concurrently with an in-flight append: rows an append
-    commits while compaction runs are lost, in ``exact/`` after the
-    rewrite read the files and before the directory swap, and in a
-    ``bands/`` partition after the rewrite read it and before its
-    dynamic overwrite."""
-    return _compact_index(spark, path, {"bands": ["band"], "exact": []})
+    Probes are not snapshot-isolated during a compaction."""
+    return {
+        name: _tables.compact_partitions(spark, os.path.join(path, name))
+        for name in ("bands", "exact")
+    }
 
 
 def lsh_index_publish_bucketed(
@@ -714,9 +626,9 @@ def _ivf_append(
         par = spark.sparkContext.defaultParallelism
         fanned = batch.repartition(max(1, min(par, -(-est_bytes // (64 << 10)))))
         assigned = _ivf_assign_table(fanned, cents, id_col, vec_col)
-        # the sentinel blocks compaction from BEFORE the staging write
-        # until the caller's commit is durable: renamed-but-uncommitted
-        # files must not be folded into compacted files
+        # the sentinel keeps renamed-but-uncommitted files out of
+        # compaction, from BEFORE the staging write until the caller's
+        # commit is durable
         os.makedirs(os.path.join(path, _PENDING), exist_ok=True)
         with open(os.path.join(path, _PENDING, token), "w") as fh:
             fh.write(token)
@@ -725,7 +637,7 @@ def _ivf_append(
             "overwrite"
         ).partitionBy("__cid__").parquet(staging)
         os.makedirs(os.path.join(path, _LEDGER), exist_ok=True)
-        _write_json(os.path.join(path, _LEDGER, f"{token}.json"), rec)
+        _tables._write_json(os.path.join(path, _LEDGER, f"{token}.json"), rec)
         n_cells = 0
         for cdir in sorted(os.listdir(staging)):
             if not cdir.startswith("__cid__="):
@@ -976,10 +888,20 @@ def ivf_index_append(
 
 def ivf_index_compact(spark: SparkSession, path: str) -> dict:
     """Fold append-accumulated small files in the IVF vectors table
-    back to scan-efficient sizes (_compact_index: cell-local
-    rewrites, row set invariant, refused while a streaming batch is
-    in flight). Returns the compaction report."""
-    return _compact_index(spark, path, {"vectors": ["__cid__"]})["vectors"]
+    back to scan-efficient sizes, cell by cell, row set invariant
+    (sinks.tables.compact_listed); returns its report. The
+    ``ivfb_<token>.parquet`` files of every token with an
+    ``_ingest_pending`` sentinel are left out: a crash-window
+    redelivery re-replaces them by name, so folding them would
+    duplicate their rows. The files are listed BEFORE the sentinels
+    are read, so a file renamed in between is never folded while its
+    sentinel goes unseen. An orphaned sentinel only keeps its batch's
+    files out. Probes are not snapshot-isolated during a compaction."""
+    vectors, pending = os.path.join(path, "vectors"), os.path.join(path, _PENDING)
+    listing = _tables.compaction_listing(vectors)
+    skip = {f"ivfb_{t}.parquet" for t in (os.listdir(pending) if os.path.isdir(pending) else [])}
+    listing = {c: [f for f in fs if os.path.basename(f) not in skip] for c, fs in listing.items()}
+    return _tables.compact_listed(spark, vectors, listing)
 
 
 def ivf_index_publish(

@@ -25,6 +25,11 @@ The reference has three kinds of write barrier (SURVEY §3):
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -180,95 +185,161 @@ def import_fact(
     replace_by_source(df, path, data_source)
 
 
+#: the compaction's staging directory, hidden inside the table, and the
+#: journal inside it; the staging partition column is a leaf's ordinal
+_STAGING = "_compacting"
+_JOURNAL = "journal.json"
+_LEAF = "__leaf__"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's reader skips these: ``_temporary``, ``_SUCCESS``, ``.crc``
+    files, the compaction's staging — but not ``__cid__=3``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def visible_files(path: str) -> dict[str, list[str]]:
+    """The parquet files a reader of the table sees, per leaf directory:
+    every path component below the table that Spark hides is skipped."""
+    leaves: dict[str, list[str]] = {}
+    for root, dirs, files in os.walk(os.path.abspath(path)):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        names = sorted(f for f in files if f.endswith(".parquet") and not _hidden(f))
+        if names:
+            leaves[root] = [os.path.join(root, f) for f in names]
+    return leaves
+
+
 def table_file_stats(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
-    """Per-leaf-directory (dir, n_files, total_bytes) for a parquet
-    table — the metadata pass a compaction planner needs. Driver-side
-    Hadoop FS listing: this is table METADATA (one row per file, the
-    same listing every scan's planning already does), not data."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stats: dict[str, list[int]] = {}
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        parent = f.getPath().getParent().toUri().getPath()
-        agg = stats.setdefault(parent, [0, 0])
-        agg[0] += 1
-        agg[1] += int(f.getLen())
-    return sorted((d, n, b) for d, (n, b) in stats.items())
+    """Per-leaf-directory (dir, n_files, total_bytes) of the files a
+    reader sees — the metadata pass a compaction planner needs."""
+    return sorted(
+        (d, len(fs), sum(map(os.path.getsize, fs))) for d, fs in visible_files(path).items()
+    )
+
+
+def _write_json(dest: str, obj) -> None:
+    """Write ``obj`` as JSON atomically: tmp file, then os.replace."""
+    tmp = dest + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, dest)
+
+
+def _remove(path: str) -> None:
+    """Delete a data file and the checksum file Hadoop's local
+    filesystem writes beside it."""
+    for p in (path, os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")):
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
+
+
+def _recover(path: str) -> None:
+    """The one recovery rule, run when every compaction starts and ends:
+    per leaf of the journal, if all its outputs landed, delete its
+    remaining inputs, else delete the outputs that landed. Then the
+    staging directory goes, journal included. Each step is idempotent,
+    so a recovery that dies is redone by the next."""
+    staging = os.path.join(path, _STAGING)
+    journal = os.path.join(staging, _JOURNAL)
+    if os.path.exists(journal):
+        with open(journal) as fh:
+            for inputs, outputs in json.load(fh):
+                done = all(os.path.exists(os.path.join(path, f)) for f in outputs)
+                for f in inputs if done else outputs:
+                    _remove(os.path.join(path, f))
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def compaction_listing(path: str) -> dict[str, list[str]]:
+    """Finish or undo an interrupted compaction (_recover), then list
+    the table's visible files per leaf, for compact_listed. A caller
+    may leave files out of the listing in between."""
+    _recover(path)
+    return visible_files(path)
+
+
+def compact_listed(
+    spark: SparkSession,
+    path: str,
+    listing: dict[str, list[str]],
+    target_bytes: int = 128 * 1024 * 1024,
+) -> dict:
+    """Rewrite the listed files of every small leaf (more than one file,
+    averaging under ``target_bytes / 2``): read them once, each row
+    tagged with its leaf's ordinal, and write them in one Spark job into
+    a staging directory hidden inside the table; write a journal of each
+    leaf's inputs and outputs; move each output into the leaf its inputs
+    came from (by identity: ``src=007`` reads back as 7); then delete
+    exactly the listed files. A file that an append commits meanwhile
+    was never listed, so it survives.
+
+    Readers are not snapshot-isolated during a compaction. If the
+    process dies between the moves and the deletes, a reader may see a
+    leaf's rows twice until the next compaction's recovery. Returns
+    {"compacted": [leaf dirs], "files_before": n, "files_after": m}."""
+    small = sorted(
+        (d, fs)
+        for d, fs in listing.items()
+        if len(fs) > 1 and sum(map(os.path.getsize, fs)) / len(fs) < target_bytes / 2
+    )
+    if not small:
+        return {"compacted": [], "files_before": 0, "files_after": 0}
+    staging = os.path.join(path, _STAGING)
+    try:
+        # one read per leaf, without basePath, so no partition value is
+        # inferred; one schema read serves them all
+        schema = spark.read.parquet(small[0][1][0]).schema
+        rows = functools.reduce(
+            DataFrame.union,
+            [
+                spark.read.schema(schema).parquet(*fs).withColumn(_LEAF, F.lit(i))
+                for i, (_, fs) in enumerate(small)
+            ],
+        )
+        # rebalance: AQE sizes the output files and splits an oversized
+        # leaf across writers
+        rows.hint("rebalance", F.col(_LEAF)).write.mode("overwrite").partitionBy(
+            _LEAF
+        ).parquet(staging)
+        plan, moves = {}, {}
+        for i, (leaf, fs) in enumerate(small):
+            cell = glob.escape(os.path.join(staging, f"{_LEAF}={i}"))
+            staged = glob.glob(os.path.join(cell, "*.parquet"))
+            if staged:  # else every input was empty: the leaf stays as it is
+                outs = [os.path.join(leaf, os.path.basename(f)) for f in staged]
+                moves.update(zip(staged, outs))
+                # relative to the table, so a moved table still recovers
+                plan[leaf] = [[os.path.relpath(f, path) for f in fl] for fl in (fs, outs)]
+        _write_json(os.path.join(staging, _JOURNAL), list(plan.values()))
+        for src, dst in moves.items():
+            os.replace(src, dst)
+        for inputs, _ in plan.values():
+            for f in inputs:
+                _remove(os.path.join(path, f))
+    finally:
+        _recover(path)
+    return {
+        "compacted": list(plan),
+        "files_before": sum(len(inputs) for inputs, _ in plan.values()),
+        "files_after": sum(len(outs) for _, outs in plan.values()),
+    }
 
 
 def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_cols: Sequence[str],
-    target_bytes: int = 128 * 1024 * 1024,
-    tmp_dir: str | None = None,
+    spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
-    """Small-file compaction for a partitioned parquet table: find
-    leaf partitions whose files average under ``target_bytes / 2``
-    with more than one file, and rewrite ONLY those partitions.
-
-    The accumulation shape this fixes is intrinsic to incremental
-    ingest (replace_by_source appends per-import files; streaming
-    sinks add one file per trigger): scans pay per-file footer reads
-    and tiny row groups defeat both vectorized scan batching and
-    min/max pruning. At 100 TB compaction must never rewrite the
-    whole table — the planner touches only offending partitions, and
-    the rewrite is a dynamic partition overwrite (a metadata swap of
-    exactly those directories).
-
-    Spark refuses to overwrite a path that feeds the same job (the
-    read would race the commit), so the bad partitions are staged
-    through ``tmp_dir`` first: read (basePath-aware, keeps partition
-    columns) → rebalance-by-partition write to tmp → dynamic
-    overwrite back. Two passes over ONLY the bad partitions' bytes.
-
-    Returns {"compacted": [partition dirs], "files_before": n,
-    "files_after": m}.
-    """
-    import shutil
-    import tempfile
-
-    bad = [
-        (d, n, b)
-        for d, n, b in table_file_stats(spark, path)
-        if n > 1 and b / n < target_bytes / 2
-    ]
-    if not bad:
-        return {"compacted": [], "files_before": 0, "files_after": 0}
-    files_before = sum(n for _, n, _ in bad)
-    staged = tmp_dir or tempfile.mkdtemp(prefix="compact_")
-    try:
-        src = (
-            spark.read.option("basePath", path).parquet(*[d for d, _, _ in bad])
-        )
-        # rebalance: AQE sizes output splits to the advisory partition
-        # size and splits oversized groups across writers, so one hot
-        # partition can't serialize into a single task
-        src.hint("rebalance", *[F.col(c) for c in partition_cols]).write.mode(
-            "overwrite"
-        ).partitionBy(*partition_cols).parquet(staged)
-        spark.read.parquet(staged).hint(
-            "rebalance", *[F.col(c) for c in partition_cols]
-        ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            *partition_cols
-        ).parquet(path)
-    finally:
-        if tmp_dir is None:
-            shutil.rmtree(staged, ignore_errors=True)
-    after = {
-        d: n for d, n, _ in table_file_stats(spark, path)
-    }
-    return {
-        "compacted": [d for d, _, _ in bad],
-        "files_before": files_before,
-        "files_after": sum(after.get(d, 0) for d, _, _ in bad),
-    }
+    """Small-file compaction of a parquet table, partitioned or flat (a
+    flat table is its one leaf): compact_listed over the files a reader
+    sees, after recovering an interrupted compaction. Incremental
+    ingest accumulates small files (per-import files, one file per
+    stream trigger); scans pay per-file footer reads, and tiny row
+    groups defeat scan batching and min/max pruning. Only offending
+    leaves are rewritten, never the whole table. The table is on a
+    local filesystem: outputs move into their leaves by rename."""
+    return compact_listed(spark, path, compaction_listing(path), target_bytes)
 
 
 def upsert_by_key(

@@ -642,7 +642,7 @@ def finalize_session_updates(updates: DataFrame) -> DataFrame:
 def _write_marker(marker: str, payload: dict | None = None) -> None:
     """Commit a batch: the atomic (tmp + rename) write of its marker, a
     JSON object (``payload``, empty by default)."""
-    from mfdb_hafro_etl_spark.sinks.index import _write_json
+    from mfdb_hafro_etl_spark.sinks.tables import _write_json
 
     os.makedirs(os.path.dirname(marker), exist_ok=True)
     _write_json(marker, payload or {})
@@ -866,7 +866,7 @@ def ivf_ingest_handler(
         if os.path.exists(marker):
             # a crash between the marker write and the sentinel removal
             # leaves the sentinel behind; the short-circuit clears it so
-            # compaction unblocks without operator intervention
+            # compaction folds this batch's files again
             _clear_pending(index_path, token)
             return
         rec, n_cells = _ivf_append(

@@ -1348,27 +1348,36 @@ def test_lsh_index_overwrite_retires_stale_meta(spark, tmp_path, monkeypatch):
     assert [(r.doc_id, r.dup_kind, r.match_id) for r in got] == [(2, "exact", 1)]
 
 
-def test_compact_flat_swaps_atomically(spark, tmp_path):
-    """_compact_flat must never overwrite the live directory in
-    place: the staged output swaps in by rename and no .__retired__
-    residue survives a successful compaction (ADVICE r7)."""
-    import os
+def _flat_table(spark, path, n_files=4, rows_per_file=1):
+    for i in range(n_files):
+        spark.createDataFrame(
+            [(i * rows_per_file + j, f"h{i}_{j}") for j in range(rows_per_file)],
+            "cid long, h string",
+        ).coalesce(1).write.mode("append").parquet(path)
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
 
-    from mfdb_hafro_etl_spark.sinks.index import _compact_flat
+
+def _visible_parquet(path):
+    from mfdb_hafro_etl_spark.sinks.tables import visible_files
+
+    return sorted(f for fs in visible_files(path).values() for f in fs)
+
+
+def test_flat_table_compacts_in_place(spark, tmp_path):
+    """A flat table is the one compaction's case without partition
+    columns: its root is the one leaf. The rewrite keeps the row set,
+    folds the files, and leaves no staging directory or journal
+    behind."""
+    from mfdb_hafro_etl_spark.sinks.tables import compact_partitions
 
     path = str(tmp_path / "exact")
-    for i in range(4):
-        spark.createDataFrame([(i, f"h{i}")], "cid long, h string").write.mode(
-            "append"
-        ).parquet(path)
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-    report = _compact_flat(spark, path)
-    assert report["files_after"] < report["files_before"]
+    before = _flat_table(spark, path)
+    report = compact_partitions(spark, path)
+    assert report["compacted"] == [path]
+    assert report["files_after"] < report["files_before"] == 4
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
-    assert not os.path.exists(path + ".__retired__")
-    assert not any(
-        e.startswith(".compact_flat_") for e in os.listdir(os.path.dirname(path))
-    )
+    assert len(_visible_parquet(path)) == report["files_after"]
+    assert not [e for e in os.listdir(path) if e.startswith("_compact")]
 
 
 def _ivf_probe_rows(spark, path, qvec, k=5, n_probe=2):
@@ -1498,6 +1507,137 @@ def test_ivf_index_compact_invariant(spark, tmp_path):
     assert _ivf_probe_rows(spark, path, qvec, n_probe=4) == before_probe
     assert report["files_after"] <= report["files_before"]
     assert report["files_before"] >= 2  # the appends actually fragmented
+
+
+def _lsh_compact_fixture(spark, path):
+    """The fixture of test_lsh_index_compact_invariant: a build and four
+    appends of three documents each."""
+    from mfdb_hafro_etl_spark.operators import dedup as dd
+
+    batches = [
+        spark.createDataFrame(
+            [(i * 10 + j, f"document number {i} {j} with shared shingle text")
+             for j in range(3)],
+            "doc_id long, text string",
+        )
+        for i in range(5)
+    ]
+    dd.lsh_index_write(batches[0], path, "doc_id", "text")
+    for b in batches[1:]:
+        dd.lsh_index_append(b, path, "doc_id", "text")
+
+
+def _ivf_compact_fixture(spark, path):
+    """The fixture of test_ivf_index_compact_invariant: 24 built rows in
+    4 cells and three appends of two rows each."""
+    sim.build_ivf_index(_ivf_fixture(spark, 24), path, n_centroids=4, kmeans_iters=0)
+    for b in range(3):
+        sim.ivf_index_append(
+            _ivf_fixture(spark, 2, id0=1000 + 10 * b), path, max_appended_frac=0.5
+        )
+
+
+_RACE_DOCS = [
+    (900 + j, f"an increment committed while compaction rewrites part {j}")
+    for j in range(5)
+]
+
+
+@pytest.mark.parametrize("case", ["lsh-exact", "lsh-bands", "ivf"])
+def test_compact_keeps_append_committed_mid_rewrite(spark, tmp_path, monkeypatch, case):
+    """An append that commits while a compaction rewrites the subtable
+    was never listed by that compaction, so its rows survive: the row
+    count is the rows before plus the rows appended, and a probe finds
+    the appended ids. The append runs once, when the compaction's
+    staging write starts."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mfdb_hafro_etl_spark.operators import dedup as dd
+
+    path = str(tmp_path / "idx")
+    if case == "ivf":
+        _ivf_compact_fixture(spark, path)
+        sub, col, extra = "vectors", "embedding", _ivf_fixture(spark, 4, id0=5000)
+        n_added = 4
+
+        def append():
+            sim.ivf_index_append(extra, path, max_appended_frac=0.5)
+    else:
+        _lsh_compact_fixture(spark, path)
+        sub, col = ("exact", "h") if case == "lsh-exact" else ("bands", "val")
+        extra = spark.createDataFrame(_RACE_DOCS, "doc_id long, text string")
+        n_added = len(_RACE_DOCS) * (1 if sub == "exact" else 8 // 2)  # k / rows_per_band
+
+        def append():
+            dd.lsh_index_append(extra, path, "doc_id", "text")
+
+    def count():
+        return spark.read.parquet(os.path.join(path, sub)).count()
+
+    before = count()
+    real_parquet = DataFrameWriter.parquet
+    fired = []
+
+    def parquet(self, p, *args, **kwargs):
+        staging = "compact" in os.path.basename(str(p).rstrip("/"))
+        if not fired and staging and col in self._df.columns:
+            fired.append(p)
+            append()
+        return real_parquet(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    report = (sim.ivf_index_compact if case == "ivf" else dd.lsh_index_compact)(spark, path)
+    monkeypatch.undo()
+    assert fired and report
+    assert count() == before + n_added
+    if case == "ivf":
+        from mfdb_hafro_etl_spark.sinks.index import _IVF_META, _ledger_total, _read_meta
+
+        meta = _read_meta(path, _IVF_META)
+        assert count() == int(meta["rows_at_build"]) + _ledger_total(
+            path, meta["build_id"], exclude=""
+        )
+        for row in extra.collect():
+            top = _ivf_probe_rows(spark, path, list(row["embedding"]), k=1, n_probe=4)
+            assert top[0][0] == row["vec_id"]
+    else:
+        # the exact case probes the appended text; the bands case a
+        # one-word variant of it, which only the band table can match
+        text = _RACE_DOCS[0][1] + ("" if sub == "exact" else " again")
+        probe = spark.createDataFrame([(1999, text)], "doc_id long, text string")
+        got = [
+            (r.dup_kind, r.match_id)
+            for r in dd.dedup_against_index(spark, path, probe, "doc_id", "text").collect()
+        ]
+        assert got == [("exact" if sub == "exact" else "near", 900)]
+
+
+@pytest.mark.parametrize("index", ["lsh", "ivf"])
+def test_index_compact_jobs(spark, tmp_path, index):
+    """One compaction of the invariant tests' fixtures runs at most 6
+    Spark jobs for the LSH index and 3 for the IVF index (the staged
+    two-pass rewrite it replaced ran 9 and 6): per compacted subtable,
+    one schema read of one listed file, then one rebalanced write that
+    reads the listed bytes once."""
+    from mfdb_hafro_etl_spark.operators import dedup as dd
+
+    path = str(tmp_path / "idx")
+    if index == "lsh":
+        _lsh_compact_fixture(spark, path)
+        compact, bound = dd.lsh_index_compact, 6
+    else:
+        _ivf_compact_fixture(spark, path)
+        compact, bound = sim.ivf_index_compact, 3
+    sc = spark.sparkContext
+    group = f"compact_jobs_{index}"
+    sc.setJobGroup(group, "one compaction")
+    try:
+        compact(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= bound
 
 
 def test_bpe_roundtrip_and_marker(spark):
@@ -1703,39 +1843,75 @@ def test_lsh_publish_crash_leaves_loud_missing_meta(spark, tmp_path, monkeypatch
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_compact_flat_rollback_on_failed_swap(spark, tmp_path, monkeypatch):
-    """If the second rename of the compaction swap fails, the
-    original table must be rolled back into place (self-review r8)."""
-    import os as _os
-
-    import pytest
-
-    from mfdb_hafro_etl_spark.sinks.index import _compact_flat
+def test_compact_rolls_back_a_failed_move(spark, tmp_path, monkeypatch):
+    """A move that fails after the leaf's first output landed rolls the
+    leaf back: the landed output is deleted, the leaf holds exactly its
+    listed inputs again, and no journal or staging is left."""
+    from mfdb_hafro_etl_spark.sinks.tables import compact_partitions
 
     path = str(tmp_path / "exact")
-    for i in range(4):
-        spark.createDataFrame([(i, f"h{i}")], "cid long, h string").write.mode(
-            "append"
-        ).parquet(path)
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    before = _flat_table(spark, path, rows_per_file=2)
+    inputs = _visible_parquet(path)
+    # two outputs for the one leaf, so that one can land before a failure
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+    real_replace = os.replace
+    moved = []
 
-    real_rename = _os.rename
+    def failing_replace(src, dst):
+        if "_compact" in str(src) and os.path.dirname(dst) == path:
+            if moved:
+                raise OSError("simulated move failure")
+            moved.append(dst)
+        return real_replace(src, dst)
 
-    def failing_rename(src, dst):
-        # fail ONLY the staged->live swap; the rollback rename
-        # (retired->live) must still work, as a real transient
-        # failure (bad staged path, permissions) would allow
-        if dst == path and ".compact_flat_" in str(src):
-            raise OSError("simulated swap failure")
-        return real_rename(src, dst)
+    monkeypatch.setattr(os, "replace", failing_replace)
+    try:
+        with pytest.raises(OSError, match="simulated"):
+            compact_partitions(spark, path)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+        monkeypatch.undo()
+    assert moved
+    assert _visible_parquet(path) == inputs
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert not [e for e in os.listdir(path) if e.startswith("_compact")]
 
-    monkeypatch.setattr(_os, "rename", failing_rename)
-    with pytest.raises(OSError, match="simulated"):
-        _compact_flat(spark, path)
+
+def test_compact_rolls_forward_after_process_death(spark, tmp_path, monkeypatch):
+    """A process that dies between the deletes leaves the journal, the
+    moved outputs and some inputs: a reader sees those rows twice until
+    the next compaction, whose recovery deletes the remaining inputs,
+    so the rows are back to one copy each."""
+    from mfdb_hafro_etl_spark.sinks import tables
+
+    path = str(tmp_path / "exact")
+    before = _flat_table(spark, path)
+    inputs = _visible_parquet(path)
+    real_remove = os.remove
+    removed = []
+
+    def dying_remove(p):
+        if p in inputs:
+            if removed:
+                raise SystemExit("simulated process death")
+            removed.append(p)
+        return real_remove(p)
+
+    # a dead process runs no recovery
+    monkeypatch.setattr(tables, "_recover", lambda path: None)
+    monkeypatch.setattr(os, "remove", dying_remove)
+    with pytest.raises(SystemExit):
+        tables.compact_partitions(spark, path)
     monkeypatch.undo()
+    left = _visible_parquet(path)
+    assert set(inputs) - set(left) == set(removed)
+    assert len(spark.read.parquet(path).collect()) > len(before)
+    assert [e for e in os.listdir(path) if e.startswith("_compact")]
+
+    tables.compact_partitions(spark, path)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
-    assert not _os.path.exists(path + ".__retired__") or True  # rolled back
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert not set(inputs) & set(_visible_parquet(path))
+    assert not [e for e in os.listdir(path) if e.startswith("_compact")]
 
 
 def test_ivf_append_empty_is_noop(spark, tmp_path):

@@ -69,6 +69,28 @@ def test_replace_by_source_leaves_session_overwrite_mode(spark, tmp_path):
         spark.conf.set(key, prev)
 
 
+def test_import_fact_gates_then_replaces_its_source(spark, tmp_path):
+    """import_fact refuses an import with an unregistered taxonomy key
+    before it writes anything, and a clean import replaces exactly its
+    own data_source (NULL keys pass the gate)."""
+    from mfdb_hafro_etl_spark.sinks import import_fact
+
+    path = str(tmp_path / "fact")
+    tax = {"vessel": (spark.createDataFrame([("V1",), ("V2",)], "vessel STRING"), ["vessel"])}
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), "id INT, vessel STRING")
+
+    import_fact(rows((1, "V1")), path, "s1", taxonomies=tax)
+    import_fact(rows((2, "V2")), path, "s2", taxonomies=tax)
+    with pytest.raises(ValueError, match="vessel"):
+        import_fact(rows((3, "V9")), path, "s1", taxonomies=tax)
+    assert sorted(r.id for r in read_fact(spark, path).collect()) == [1, 2]
+    import_fact(rows((4, "V2"), (5, None)), path, "s1", taxonomies=tax)
+    got = sorted((r.id, r.vessel, r.data_source) for r in read_fact(spark, path).collect())
+    assert got == [(2, "V2", "s2"), (4, "V2", "s1"), (5, None, "s1")]
+
+
 def test_materialize_roundtrip_with_clustering(spark, tmp_path):
     df = spark.range(0, 1000).select(
         (F.col("id") % 7).alias("tow"), F.col("id").alias("x")
@@ -242,7 +264,7 @@ def test_compact_partitions_only_touches_small_partitions(spark, tmp_path):
     content_before = sorted(
         (r["id"], r["src"]) for r in spark.read.parquet(path).collect()
     )
-    res = compact_partitions(spark, path, ["src"])
+    res = compact_partitions(spark, path)
     assert [d for d in res["compacted"]] and res["compacted"][0].endswith("src=a")
     assert res["files_after"] < res["files_before"] == 8
 
@@ -256,6 +278,67 @@ def test_compact_partitions_only_touches_small_partitions(spark, tmp_path):
     assert content_before == sorted(
         (r["id"], r["src"]) for r in spark.read.parquet(path).collect()
     )
+
+
+def _leaf_files(leaf):
+    return sorted(f for f in os.listdir(leaf) if f.endswith(".parquet") and f[0] not in "._")
+
+
+def test_compact_partitions_returns_rows_to_their_own_leaf(spark, tmp_path):
+    """Compacted output goes back to the directory its inputs came
+    from, not to one derived from the inferred partition value: a
+    ``src=007`` leaf reads back as 7, and a rewrite routed by value
+    would add a ``src=7`` leaf next to the old files."""
+    from mfdb_hafro_etl_spark.sinks.tables import compact_partitions
+
+    path = str(tmp_path / "fact")
+    spark.range(0, 400).withColumn("src", F.lit("007")).repartition(8).write.partitionBy(
+        "src"
+    ).parquet(path)
+    leaf = tmp_path / "fact" / "src=007"
+    n_before = len(_leaf_files(leaf))
+    res = compact_partitions(spark, path)
+    assert res["compacted"] == [str(leaf)]
+    assert [d for d in os.listdir(path) if d[0] not in "._"] == ["src=007"]
+    assert len(_leaf_files(leaf)) < n_before
+    assert spark.read.parquet(path).count() == 400
+
+
+def test_compact_partitions_lists_only_what_the_reader_sees(spark, tmp_path):
+    """Parquet files under a hidden ``_temporary/`` (an in-flight or
+    aborted Spark append; the reader ignores them) are neither listed
+    by table_file_stats nor touched by compaction: the visible leaf is
+    compacted with its rows unchanged, and the hidden files stay byte
+    for byte."""
+    import hashlib
+    import shutil
+
+    from mfdb_hafro_etl_spark.sinks.tables import compact_partitions, table_file_stats
+
+    path = str(tmp_path / "fact")
+    spark.range(0, 400).withColumn("src", F.lit("a")).repartition(8).write.partitionBy(
+        "src"
+    ).parquet(path)
+    side = str(tmp_path / "side")
+    spark.range(1000, 1100).repartition(2).write.parquet(side)
+    hidden = tmp_path / "fact" / "_temporary" / "0" / "src=a"
+    hidden.mkdir(parents=True)
+    for f in _leaf_files(side):
+        shutil.copy(os.path.join(side, f), hidden / f)
+
+    def digests():
+        return {f: hashlib.md5((hidden / f).read_bytes()).hexdigest() for f in os.listdir(hidden)}
+
+    hidden_before = digests()
+    assert len(hidden_before) == 2
+    stats = table_file_stats(spark, path)
+    assert [d for d, _, _ in stats] == [str(tmp_path / "fact" / "src=a")]
+    rows = sorted(map(tuple, spark.read.parquet(path).collect()))
+    res = compact_partitions(spark, path)
+    assert res["compacted"] == [str(tmp_path / "fact" / "src=a")]
+    assert res["files_after"] < res["files_before"] == 8
+    assert digests() == hidden_before
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows
 
 
 def test_upsert_by_key_partition_local(spark, tmp_path):

@@ -1066,17 +1066,19 @@ def test_ivf_ingest_budget_from_commit_log(spark, tmp_path, monkeypatch):
     assert len(_vec_rows(spark, path)) == 64  # 56 rebuilt + 8
 
 
-def test_ivf_compact_refuses_mid_crash_window(spark, tmp_path):
+def test_ivf_compact_skips_mid_crash_window(spark, tmp_path):
     """r9 verdict #5, IVF family: the exactly-once rename discipline
     requires an uncommitted batch's ivfb_<token>.parquet files to
-    SURVIVE until its marker exists — compaction inside that crash
-    window would fold them into compacted files, and the redelivery
-    would re-append the rows. The handler marks in-flight batches
-    under <index>/_ingest_pending; ivf_index_compact refuses while
-    any sentinel exists, and the sentinel lifecycle self-heals: the
-    post-marker short-circuit clears a sentinel orphaned by a crash
-    after the marker write."""
-    import pytest
+    SURVIVE until its marker exists — folding them into compacted
+    files would make the redelivery re-append the rows. The handler
+    marks in-flight batches under <index>/_ingest_pending, and
+    ivf_index_compact leaves those tokens' files out of its listing:
+    a compaction inside the crash window succeeds, the pending files
+    keep their names and bytes, the redelivery converges to the
+    committed rows, and the next compaction after the commit folds
+    them. The post-marker short-circuit clears a sentinel orphaned by
+    a crash after the marker write."""
+    import hashlib
 
     from mfdb_hafro_etl_spark.operators.similarity import ivf_index_compact
     from mfdb_hafro_etl_spark.sinks.index import _stream_token
@@ -1086,28 +1088,42 @@ def test_ivf_compact_refuses_mid_crash_window(spark, tmp_path):
     logd = str(tmp_path / "log_mx")
     handle = ivf_ingest_handler(path, logd, max_appended_frac=1.0)
     handle(_emb_df(spark, range(0, 8)), 0)
+    handle(_emb_df(spark, range(8, 16)), 1)
     committed = _vec_rows(spark, path)
-    assert len(committed) == 48
-    # crash window: files renamed, marker lost, sentinel still present
-    os.remove(os.path.join(logd, "_commits", "0"))
-    pend = os.path.join(path, "_ingest_pending", _stream_token(logd, 0))
+    assert len(committed) == 56
+    # crash window of batch 1: files renamed, marker lost, sentinel present
+    token = _stream_token(logd, 1)
+    os.remove(os.path.join(logd, "_commits", "1"))
+    pend = os.path.join(path, "_ingest_pending", token)
     os.makedirs(os.path.dirname(pend), exist_ok=True)
-    open(pend, "w").write("b0")
-    with pytest.raises(RuntimeError, match="in-flight"):
-        ivf_index_compact(spark, path)
+    open(pend, "w").write("b1")
+
+    def pending_files():
+        return {
+            os.path.join(d, f): hashlib.md5(open(os.path.join(d, f), "rb").read()).hexdigest()
+            for d, _, fs in os.walk(os.path.join(path, "vectors"))
+            for f in fs
+            if f == f"ivfb_{token}.parquet"
+        }
+
+    pending = pending_files()
+    assert pending
+    rep = ivf_index_compact(spark, path)
+    assert rep["files_before"] > rep["files_after"] > 0  # the committed files folded
+    assert pending_files() == pending
+    assert _vec_rows(spark, path) == committed
     # redelivery converges (same rows), commits, and clears the sentinel
-    handle(_emb_df(spark, range(0, 8)), 0)
+    handle(_emb_df(spark, range(8, 16)), 1)
     assert _vec_rows(spark, path) == committed
     assert not os.path.exists(pend)
-    rep = ivf_index_compact(spark, path)  # now permitted
-    assert _vec_rows(spark, path) == committed  # row set invariant
-    assert "files_before" in str(rep) or isinstance(rep, dict)
-    # crash AFTER the marker but before sentinel removal: the marker
-    # short-circuit must clear the orphan so compaction unblocks
-    open(pend, "w").write("b0")
-    handle(_emb_df(spark, range(0, 8)), 0)  # marker present -> no-op
-    assert not os.path.exists(pend)
     ivf_index_compact(spark, path)
+    assert not pending_files()
+    assert _vec_rows(spark, path) == committed
+    # crash AFTER the marker but before sentinel removal: the marker
+    # short-circuit clears the orphan
+    open(pend, "w").write("b1")
+    handle(_emb_df(spark, range(8, 16)), 1)  # marker present -> no-op
+    assert not os.path.exists(pend)
 
 
 def test_lsh_compact_mid_crash_window_converges(spark, tmp_path):
